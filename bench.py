@@ -11,7 +11,10 @@ effects that have nothing to do with the plan; this machine shows up to ±2x
 ambient noise on sub-second queries, which min-of-2 demonstrably could not
 reject — see VERDICT round 3).  Each run materializes the FULL result through
 a noop datasource write (every column evaluated and serialized), not
-``df.count()``, which lets Spark skip projection-only column work."""
+``df.count()``, which lets Spark skip projection-only column work.
+
+The headline queries run in sorted-name order, so the run order does not
+depend on ``queries.DRIVER_WINDOW`` (which reorders the registry)."""
 
 from __future__ import annotations
 
@@ -189,7 +192,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name, spec in headline_queries().items():
+    for name, spec in sorted(headline_queries().items()):
         best = float("inf")
         try:
             for _ in range(3):

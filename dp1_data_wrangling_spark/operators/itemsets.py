@@ -13,14 +13,16 @@ from the raw item stream.
 Engine extension — the reference (exporter.py:75-141) has no mining
 tier.
 
-Scale posture (100 TB): four narrow shuffles — the (basket, item)
-distinct, the item census (map-side combinable), the per-basket cap
-window, and the pair census (map-side combinable); the frequent-item
-prune is a broadcast semi-join while the frequent vocabulary is
-catalog-sized.  The blow-up valve is ``max_items_per_basket``: pair
-volume is bounded by baskets x cap²/2 regardless of basket skew, and
-the cap is DETERMINISTIC (lexicographically first items win) so results
-are partitioning-independent and SQL-replayable — a capped basket is a
+Scale posture (100 TB): the raw (basket, item) stream crosses ONE data
+shuffle — the basket-keyed ``collect_set`` aggregate, which dedups and
+groups in the same exchange.  The item census and the pair census are
+map-side-combinable aggregates over that deduped per-basket view, and the
+frequent vocabulary reaches every basket as a one-row broadcast (prune
+and cap are row-local array ops, no join).  The blow-up valve is
+``max_items_per_basket``: pair volume is bounded by baskets x cap²/2
+regardless of basket skew, and the cap is DETERMINISTIC
+(lexicographically first items win) so results are
+partitioning-independent and SQL-replayable — a capped basket is a
 documented semantic, not silent truncation.  A hot ITEM costs nothing
 extra (pairs are keyed by basket, never by item).
 """

@@ -92,8 +92,15 @@ class Transaction:
         zorder_by: list[str] | None = None,
         max_records_per_file: int | None = None,
         evolve_schema: bool = False,
-    ) -> None:
-        """Write ``df`` into this transaction's staging area for ``table``.
+    ) -> DataFrame:
+        """Write ``df`` into this transaction's staging area for ``table``
+        and return the staged root read back.
+
+        The returned DataFrame has ``df``'s columns and types, read with
+        ``df``'s schema, so no schema-inference job runs and an empty write
+        reads as empty.  A hive partition column keeps its written type,
+        whereas ``Catalog.read`` infers partition-column types.  Callers
+        that use the rows again read this instead of caching ``df``.
 
         ``sort_by`` applies a partition-local sort before write (the
         reference's compressibility sorts, exporter.py:90-91 — no extra
@@ -110,6 +117,7 @@ class Transaction:
         """
         rel = f"data/{self.txn_id}/{table}"
         out = self.root / rel
+        schema = df.schema
         if zorder_by and range_by:
             raise ValueError("pass range_by or zorder_by, not both")
         # Write-time schema gate (appends only; one parquet-footer read):
@@ -256,6 +264,10 @@ class Transaction:
             if bs:
                 self.bloom_stats[table] = bs
         self.writes[table] = (mode, rel)
+        staged = df.sparkSession.read.schema(schema).parquet(str(out))
+        if partition_by:  # partition columns read back last: restore the order
+            staged = staged.select(*[staged[f"`{c}`"] for c in schema.names])
+        return staged
 
 
 

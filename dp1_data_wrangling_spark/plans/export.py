@@ -23,9 +23,10 @@ declarative Spark plans published through one atomic catalog transaction:
   ``meta`` — swapped into place by the same atomic commit (G3).
 
 Scale posture: per dataset type the plan is scan → broadcast join → one
-window shuffle → write; nothing collects fact data to the driver, and the
-exported-id set used by the semi-filters stays a DataFrame (SURVEY.md
-§7.4.7).
+window shuffle → write; nothing collects fact data to the driver.  Nothing
+is cached either: each resolved table is written, then read back from its
+staged root, and the exported ids and referenced dimension keys used by
+the semi-filters are scans of those staged roots (SURVEY.md §7.4.7).
 """
 
 from __future__ import annotations
@@ -93,104 +94,94 @@ def run_export(
 
     cat = Catalog(out_root)
     txn = cat.begin()
-    cached: list[DataFrame] = []  # unpersisted in the finally below
-    try:
-        chain = flatten_chains(spark, collection_chains, collections, root_collection)
+    chain = flatten_chains(spark, collection_chains, collections, root_collection)
 
-        # -- datasets: find-first resolve per type (J4, calibration bypass) ----
-        exported_ids: DataFrame | None = None
-        exported_keys: dict[str, DataFrame] = {}  # data-ID col -> distinct values
-        for name in names:
-            dt = universe.dataset_types[name]
-            data_id_cols = universe.data_id_columns(name)
-            resolved = find_first(
-                datasets[name],
-                chain,
-                data_id_cols,
-                is_calibration=dt.is_calibration,
+    # -- datasets: find-first resolve per type (J4, calibration bypass) --------
+    exported_ids: DataFrame | None = None
+    exported_keys: dict[str, DataFrame] = {}  # data-ID col -> distinct values
+    for name in names:
+        dt = universe.dataset_types[name]
+        data_id_cols = universe.data_id_columns(name)
+        resolved = find_first(
+            datasets[name],
+            chain,
+            data_id_cols,
+            is_calibration=dt.is_calibration,
+        )
+        # id/key extraction reads the staged root, not the resolve plan
+        resolved = txn.stage(f"datasets/{name}", resolved, sort_by=data_id_cols)
+        ids = resolved.select("dataset_id")
+        exported_ids = ids if exported_ids is None else exported_ids.unionByName(ids)
+        for c in data_id_cols:
+            vals = resolved.select(F.col(c).alias("__k")).distinct()
+            exported_keys[c] = (
+                vals
+                if c not in exported_keys
+                else exported_keys[c].unionByName(vals).distinct()
             )
-            # One shuffle already happened in the agg; cache the (small-ish)
-            # resolved output so id/key extraction doesn't recompute the plan.
-            resolved = resolved.cache()
-            cached.append(resolved)
-            txn.stage(f"datasets/{name}", resolved, sort_by=data_id_cols)
-            ids = resolved.select("dataset_id")
-            exported_ids = ids if exported_ids is None else exported_ids.unionByName(ids)
-            for c in data_id_cols:
-                vals = resolved.select(F.col(c).alias("__k")).distinct()
-                exported_keys[c] = (
-                    vals
-                    if c not in exported_keys
-                    else exported_keys[c].unionByName(vals).distinct()
-                )
-        if exported_ids is None:
-            raise ValueError("nothing to export")
-        exported_ids = exported_ids.distinct().cache()
-        cached.append(exported_ids)
+    if exported_ids is None:
+        raise ValueError("nothing to export")
+    exported_ids = exported_ids.distinct()
 
-        # -- dimension records: dependency-closure expansion (J1) --------------
-        # Walk dimensions in toposort order; a dimension referenced by exported
-        # datasets exports only the referenced records (semi-join), and its own
-        # payload contributes referenced keys for its dependencies (e.g. the
-        # nations of exported customers), mirroring with_dimension_records().
-        order = universe.sorted_dimensions(list(dimension_records))
-        for dim_name in reversed(order):  # high→low so dependents extend key sets
-            dim = universe.dimensions[dim_name]
-            if not dim.has_own_table or dim_name not in dimension_records:
-                continue
-            records = dimension_records[dim_name]
-            key = dim.keys[0] if len(dim.keys) == 1 else None
-            if key is not None and key in exported_keys:
-                records = records.join(
-                    exported_keys[key].withColumnRenamed("__k", key), key, "left_semi"
-                )
-            records = records.dropDuplicates(list(dim.keys)).cache()
-            cached.append(records)
-            txn.stage(f"dimensions/{dim_name}", records, sort_by=list(dim.keys))
-            # Payload columns that are key columns of a dependency become
-            # referenced keys (customer.nation -> dimension nation).
-            for dep in dim.depends_on:
-                for k in universe.dimensions[dep].keys:
-                    if k in dim.payload or k in dim.keys:
-                        vals = records.select(F.col(k).alias("__k")).distinct()
-                        exported_keys[k] = (
-                            vals
-                            if k not in exported_keys
-                            else exported_keys[k].unionByName(vals).distinct()
-                        )
+    # -- dimension records: dependency-closure expansion (J1) ------------------
+    # Walk dimensions in toposort order; a dimension referenced by exported
+    # datasets exports only the referenced records (semi-join), and its own
+    # payload contributes referenced keys for its dependencies (e.g. the
+    # nations of exported customers), mirroring with_dimension_records().
+    order = universe.sorted_dimensions(list(dimension_records))
+    for dim_name in reversed(order):  # high→low so dependents extend key sets
+        dim = universe.dimensions[dim_name]
+        if not dim.has_own_table or dim_name not in dimension_records:
+            continue
+        records = dimension_records[dim_name]
+        key = dim.keys[0] if len(dim.keys) == 1 else None
+        if key is not None and key in exported_keys:
+            records = records.join(
+                exported_keys[key].withColumnRenamed("__k", key), key, "left_semi"
+            )
+        records = txn.stage(
+            f"dimensions/{dim_name}",
+            records.dropDuplicates(list(dim.keys)),
+            sort_by=list(dim.keys),
+        )
+        # Payload columns that are key columns of a dependency become
+        # referenced keys (customer.nation -> dimension nation).
+        for dep in dim.depends_on:
+            for k in universe.dimensions[dep].keys:
+                if k in dim.payload or k in dim.keys:
+                    vals = records.select(F.col(k).alias("__k")).distinct()
+                    exported_keys[k] = (
+                        vals
+                        if k not in exported_keys
+                        else exported_keys[k].unionByName(vals).distinct()
+                    )
 
-        # -- associations: semi-filter + (collection, data ID) sort (P5/O2) ----
-        assoc = associations.join(exported_ids, "dataset_id", "left_semi")
-        txn.stage("associations", assoc, sort_by=["collection"])
+    # -- associations: semi-filter + (collection, data ID) sort (P5/O2) --------
+    assoc = associations.join(exported_ids, "dataset_id", "left_semi")
+    txn.stage("associations", assoc, sort_by=["collection"])
 
-        # -- datastore records: priority dedup then semi-filter (J5/P6) --------
-        records = datastore_records
-        if datastore_priority:
-            records = priority_dedup(records, priority_map(spark, list(datastore_priority)))
-        records = records.join(exported_ids, "dataset_id", "left_semi")
-        txn.stage("datastore_records", records, sort_by=["datastore_name", "path"])
+    # -- datastore records: priority dedup then semi-filter (J5/P6) ------------
+    records = datastore_records
+    if datastore_priority:
+        records = priority_dedup(records, priority_map(spark, list(datastore_priority)))
+    records = records.join(exported_ids, "dataset_id", "left_semi")
+    txn.stage("datastore_records", records, sort_by=["datastore_name", "path"])
 
-        # -- collection catalog (K6; two tiny tables, not YAML) ----------------
-        txn.stage("collections", collections)
-        txn.stage("collection_chains", collection_chains)
+    # -- collection catalog (K6; two tiny tables, not YAML) --------------------
+    txn.stage("collections", collections)
+    txn.stage("collection_chains", collection_chains)
 
-        # -- sidecar manifests (K5/K6 → catalog meta; same atomic swap) --------
-        commit_meta = {
-            "index": {
-                "root_collection": root_collection,
-                "dataset_types": names,
-                "dimensions": [
-                    d for d in order if universe.dimensions[d].has_own_table
-                ],
-            },
-            "universe": universe.to_manifest(),
-            "datastore_priority": list(datastore_priority),
-        }
-        cat.commit(txn, meta=commit_meta)
-    finally:
-        # covers the staging loops too (matching run_import): a failure in
-        # stage/certify/id-extraction must not leak pinned storage for the
-        # session's lifetime
-        for df in cached:
-            df.unpersist()
+    # -- sidecar manifests (K5/K6 → catalog meta; same atomic swap) ------------
+    commit_meta = {
+        "index": {
+            "root_collection": root_collection,
+            "dataset_types": names,
+            "dimensions": [
+                d for d in order if universe.dimensions[d].has_own_table
+            ],
+        },
+        "universe": universe.to_manifest(),
+        "datastore_priority": list(datastore_priority),
+    }
+    cat.commit(txn, meta=commit_meta)
     return cat

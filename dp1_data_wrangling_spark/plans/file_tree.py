@@ -6,11 +6,13 @@ The reference streams the exported datastore records, rewrites each path
 over a 16-thread pool, tolerating ``FileExistsError`` because many records
 share one file.  The Spark shape:
 
-- path rewriting is pure column expressions (C3/C6/C7) — JVM-side,
-  whole-stage-codegen'd;
-- the side-effecting sink is ``foreachPartition``: executor-local loops,
-  parallelism = partition count instead of a thread pool (G6);
-- idempotent under task retries: an existing correct link is success, a
+- path rewriting and the (source, link) dedup are column expressions
+  (C3/C6/C7) — JVM-side, whole-stage-codegen'd;
+- the side-effecting sink streams the distinct pairs through the driver
+  (``toLocalIterator``, one partition in memory at a time) and creates the
+  links in one loop — the reference's single-process shape, with no Python
+  worker to start;
+- idempotent on re-runs: an existing correct link is success, a
   conflicting one is an error (SURVEY.md §7.4.6).
 """
 
@@ -47,21 +49,24 @@ def mapped_paths(
     return records.select(source.alias("source"), link.alias("link")).distinct()
 
 
-def _create_links(tree_root: str, rows: Iterable) -> None:
-    # Runs on executors; deliberately stdlib-only (pickled closure).
+def _create_links(tree_root: str, rows: Iterable) -> int:
+    """Create one symlink per (source, link) row; returns the rows seen."""
+    n = 0
     for row in rows:
+        n += 1
         dest = os.path.join(tree_root, row["link"])
         os.makedirs(os.path.dirname(dest), exist_ok=True)
         try:
             os.symlink(row["source"], dest)
         except FileExistsError:
-            # Many-to-one paths and task retries both land here; a link to
-            # the same source is success, anything else is corruption.
+            # A re-run over an existing tree lands here; a link to the same
+            # source is success, anything else is corruption.
             if os.readlink(dest) != row["source"]:
                 raise FileExistsError(
                     f"{dest} exists and points elsewhere: "
                     f"{os.readlink(dest)} != {row['source']}"
                 )
+    return n
 
 
 def generate_file_tree(
@@ -73,11 +78,8 @@ def generate_file_tree(
 ) -> int:
     """Materialize the symlink farm; returns the number of distinct links.
 
-    Local-filesystem sink by design (like the reference): ``tree_root``
-    must be visible to every executor (shared FS) — true on local[N] and on
-    the reference's single-node deployment alike."""
-    pairs = mapped_paths(records, datastore_root, path_col=path_col).cache()
-    n = pairs.count()
-    pairs.foreachPartition(lambda rows: _create_links(tree_root, rows))
-    pairs.unpersist()
-    return n
+    The distinct (source, link) pairs stream to the driver one partition at
+    a time and the driver creates the links, so ``tree_root`` need only be
+    visible to the driver."""
+    pairs = mapped_paths(records, datastore_root, path_col=path_col)
+    return _create_links(tree_root, pairs.toLocalIterator())

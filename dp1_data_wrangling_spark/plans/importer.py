@@ -15,8 +15,11 @@ path-mapping function.  The Spark re-expression:
 - datasets are written hive-partitioned by run (the reference's
   sort+group-by-run chunked inserts, importer.py:79-97 → A5/K8);
 - association dispatch on collection type: TAGGED appended, CALIBRATION
-  certified first — the sort-based neighbor overlap check, one shuffle,
-  including already-published intervals (importer.py:104-117 → A6/J7/K10);
+  certified before commit — the sort-based neighbor overlap check, one
+  shuffle, over the staged rows plus already-published intervals
+  (importer.py:104-117 → A6/J7/K10);
+- nothing is cached: rows used again after their write (dataset ids,
+  staged associations) are read back from the staged root;
 - datastore records are semi-filtered to imported datasets and path-mapped
   with native column expressions; the three reference mappings (RSP, Rucio,
   identity) plus a pandas-UDF plug point for user mappings
@@ -109,112 +112,103 @@ def run_import(
 
     tgt = Catalog(target_root)
     txn = tgt.begin()
-    cached: list[DataFrame] = []  # unpersisted in the finally below
 
-    try:
-        # -- dimensions, dependency-ordered, skip_existing (O6/K7/P8) ----------
-        for dim_name in universe.sorted_dimensions(index["dimensions"]):
-            dim = universe.dimensions[dim_name]
-            if not dim.has_own_table:
-                continue
-            table = f"dimensions/{dim_name}"
-            rows = src.read(spark, table)
-            existing = tgt.read(spark, table) if tgt.exists(table) else None
-            rows = _skip_existing(rows, existing, dim.keys)
-            txn.stage(table, rows, sort_by=list(dim.keys))
+    # -- dimensions, dependency-ordered, skip_existing (O6/K7/P8) --------------
+    for dim_name in universe.sorted_dimensions(index["dimensions"]):
+        dim = universe.dimensions[dim_name]
+        if not dim.has_own_table:
+            continue
+        table = f"dimensions/{dim_name}"
+        rows = src.read(spark, table)
+        existing = tgt.read(spark, table) if tgt.exists(table) else None
+        rows = _skip_existing(rows, existing, dim.keys)
+        txn.stage(table, rows, sort_by=list(dim.keys))
 
-        # -- datasets per type, partitioned by run (A5/K8) ---------------------
-        imported_ids: DataFrame | None = None
-        for name in requested:
-            table = f"datasets/{name}"
-            rows = src.read(spark, table)
-            existing = tgt.read(spark, table) if tgt.exists(table) else None
-            # cache: the anti-joined rows execute once for the staged write and
-            # again through imported_ids' semi-filters below
-            rows = _skip_existing(rows, existing, ["dataset_id"]).cache()
-            cached.append(rows)
-            txn.stage(table, rows, partition_by=["run"],
-                      sort_by=universe.data_id_columns(name))
-            ids = rows.select("dataset_id")
-            imported_ids = ids if imported_ids is None else imported_ids.unionByName(ids)
-            if existing is not None:
-                prior = existing.select("dataset_id")
-                imported_ids = imported_ids.unionByName(prior)
-        assert imported_ids is not None
-        imported_ids = imported_ids.distinct()
+    # -- datasets per type, partitioned by run (A5/K8) -------------------------
+    imported_ids: DataFrame | None = None
+    for name in requested:
+        table = f"datasets/{name}"
+        rows = src.read(spark, table)
+        existing = tgt.read(spark, table) if tgt.exists(table) else None
+        # imported_ids' semi-filters below read the staged root, so the
+        # anti-joined rows execute once
+        rows = txn.stage(table, _skip_existing(rows, existing, ["dataset_id"]),
+                         partition_by=["run"], sort_by=universe.data_id_columns(name))
+        ids = rows.select("dataset_id")
+        imported_ids = ids if imported_ids is None else imported_ids.unionByName(ids)
+        if existing is not None:
+            prior = existing.select("dataset_id")
+            imported_ids = imported_ids.unionByName(prior)
+    assert imported_ids is not None
+    imported_ids = imported_ids.distinct()
 
-        # -- associations: dispatch on collection type (A6/J7/K9/K10) ----------
-        assoc = src.read(spark, "associations")
-        collections = src.read(spark, "collections")
-        typed = assoc.join(F.broadcast(collections),
-                           assoc.collection == collections.name).drop("name")
-        kinds = {r["type"] for r in typed.select("type").distinct().collect()}
-        bad = kinds - {"TAGGED", "CALIBRATION"}
-        if bad:  # importer.py:113-117
-            raise ValueError(f"unexpected collection type(s) in associations: {sorted(bad)}")
-        existing_assoc = (
-            tgt.read(spark, "associations") if tgt.exists("associations") else None
-        )
-        # skip_existing for association rows: whole-row anti-join, null-safe
-        # because TAGGED timespans are NULL (re-import must be a no-op).
+    # -- associations: dispatch on collection type (A6/J7/K9/K10) --------------
+    assoc = src.read(spark, "associations")
+    collections = src.read(spark, "collections")
+    typed = assoc.join(F.broadcast(collections),
+                       assoc.collection == collections.name).drop("name")
+    kinds = {r["type"] for r in typed.select("type").distinct().collect()}
+    bad = kinds - {"TAGGED", "CALIBRATION"}
+    if bad:  # importer.py:113-117
+        raise ValueError(f"unexpected collection type(s) in associations: {sorted(bad)}")
+    new_assoc = typed.drop("type")
+    existing_assoc = (
+        tgt.read(spark, "associations") if tgt.exists("associations") else None
+    )
+    # skip_existing for association rows: whole-row anti-join, null-safe
+    # because TAGGED timespans are NULL (re-import must be a no-op).
+    if existing_assoc is not None:
+        cond = None
+        for c in new_assoc.columns:
+            eq = new_assoc[c].eqNullSafe(existing_assoc[c])
+            cond = eq if cond is None else cond & eq
+        new_assoc = new_assoc.join(existing_assoc, cond, "left_anti")
+    new_assoc = txn.stage("associations", new_assoc, sort_by=["collection"])
+    # certify: validate calibration validity intervals against BOTH the new
+    # and already-published rows for the same (collection, data ID).  The
+    # new rows are the staged root; a failure here aborts before commit.
+    calib_collections = F.broadcast(collections.filter(F.col("type") == "CALIBRATION"))
+
+    def calibrations(rows: DataFrame) -> DataFrame:
+        return rows.join(
+            calib_collections, rows.collection == calib_collections.name
+        ).drop("name", "type")
+
+    calib_new = calibrations(new_assoc)
+    if calib_new.limit(1).count():
+        calib_all = calib_new
         if existing_assoc is not None:
-            cond = None
-            for c in typed.drop("type").columns:
-                eq = typed[c].eqNullSafe(existing_assoc[c])
-                cond = eq if cond is None else cond & eq
-            typed = typed.join(existing_assoc, cond, "left_anti")
-        # cache: `typed` feeds the calib probe, the certify check, and the
-        # staged write — without it the assoc join + whole-row anti-join
-        # re-executes for each (export.py caches its analogues the same way)
-        typed = typed.cache()
-        cached.append(typed)
-        new_assoc = typed.drop("type")
-        # certify: validate calibration validity intervals against BOTH the new
-        # and already-published rows for the same (collection, data ID).
-        calib_new = typed.filter(F.col("type") == "CALIBRATION").drop("type")
-        if calib_new.limit(1).count():
-            calib_all = calib_new
-            if existing_assoc is not None:
-                calib_all = calib_all.unionByName(
-                    existing_assoc.join(
-                        F.broadcast(collections.filter(F.col("type") == "CALIBRATION")),
-                        existing_assoc.collection == collections.name,
-                    ).drop("name", "type")
-                )
-            data_id_cols = [
-                c for c in calib_all.columns
-                if c not in {"dataset_id", "run", "collection", "begin_nsec", "end_nsec"}
-            ]
-            check_no_overlaps(calib_all, ["collection", *data_id_cols])
-        txn.stage("associations", new_assoc, sort_by=["collection"])
+            calib_all = calib_all.unionByName(calibrations(existing_assoc))
+        data_id_cols = [
+            c for c in calib_all.columns
+            if c not in {"dataset_id", "run", "collection", "begin_nsec", "end_nsec"}
+        ]
+        check_no_overlaps(calib_all, ["collection", *data_id_cols])
 
-        # -- datastore records: semi-filter + path mapping (P6/C3-C5) ----------
-        records = src.read(spark, "datastore_records").join(
-            imported_ids, "dataset_id", "left_semi"
-        )
-        existing_rec = (
-            tgt.read(spark, "datastore_records")
-            if tgt.exists("datastore_records")
-            else None
-        )
-        records = _skip_existing(records, existing_rec, ["datastore_name", "dataset_id"])
-        if path_mapper is not None:
-            records = records.withColumn("path", path_mapper(F.col("path")))
-        if guard_absolute_uris:  # import_dp1.py:92-95
-            guard_no_absolute_uri(records, "path")
-        txn.stage("datastore_records", records, sort_by=["datastore_name", "path"])
+    # -- datastore records: semi-filter + path mapping (P6/C3-C5) --------------
+    records = src.read(spark, "datastore_records").join(
+        imported_ids, "dataset_id", "left_semi"
+    )
+    existing_rec = (
+        tgt.read(spark, "datastore_records")
+        if tgt.exists("datastore_records")
+        else None
+    )
+    records = _skip_existing(records, existing_rec, ["datastore_name", "dataset_id"])
+    if path_mapper is not None:
+        records = records.withColumn("path", path_mapper(F.col("path")))
+    if guard_absolute_uris:  # import_dp1.py:92-95
+        guard_no_absolute_uri(records, "path")
+    txn.stage("datastore_records", records, sort_by=["datastore_name", "path"])
 
-        # -- collection catalog ------------------------------------------------
-        for table in ("collections", "collection_chains"):
-            rows = src.read(spark, table)
-            existing = tgt.read(spark, table) if tgt.exists(table) else None
-            keys = ["name"] if table == "collections" else ["parent", "child"]
-            txn.stage(table, _skip_existing(rows, existing, keys))
+    # -- collection catalog ----------------------------------------------------
+    for table in ("collections", "collection_chains"):
+        rows = src.read(spark, table)
+        existing = tgt.read(spark, table) if tgt.exists(table) else None
+        keys = ["name"] if table == "collections" else ["parent", "child"]
+        txn.stage(table, _skip_existing(rows, existing, keys))
 
-        tgt.commit(txn, meta=meta)  # ONE atomic swap = the whole import (G3)
-    finally:
-        for df in cached:
-            df.unpersist()
+    tgt.commit(txn, meta=meta)  # ONE atomic swap = the whole import (G3)
     return tgt
 
 

@@ -4,6 +4,7 @@ Local testing runs on ``local[N]`` in one JVM; the conf choices below are
 the ones that matter identically on a 1000-executor cluster:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing);
+  at Spark 4.1 AQE does not coalesce the partitions of a cached plan;
 - sane broadcast threshold so dimension tables broadcast (SURVEY.md §2.4 J1);
 - shuffle partitions sized for the local fixture scale, overridable via
   ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (on a real cluster you'd set this to

@@ -354,6 +354,20 @@ def test_cosine_self_similarity(spark):
     assert all(abs(r["s"] - 1.0) < 1e-9 for r in out)
 
 
+def test_dot_null_on_length_mismatch(spark):
+    """dot(a, b) is NULL when size(a) != size(b), in either direction, and
+    the exact sum when the sizes match."""
+    from dp1_data_wrangling_spark.operators.similarity import dot
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0], [3.0, 4.0]), (2, [1.0, 2.0], [3.0]), (3, [1.0], [3.0, 4.0])],
+        "k int, a array<double>, b array<double>",
+    )
+    out = df.select("k", dot(F.col("a"), F.col("b")).alias("d")).collect()
+    got = {r["k"]: r["d"] for r in out}
+    assert got == {1: 11.0, 2: None, 3: None}
+
+
 # --- multimodal ------------------------------------------------------------
 
 

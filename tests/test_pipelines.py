@@ -151,6 +151,28 @@ def test_import_certify_rejects_overlap(spark, export_cat, tmp_path):
     assert not (target / "MANIFEST.json").exists() or Catalog(target).tables() == []
 
 
+def test_migration_coalesces_staged_roots_and_caches_nothing(spark, tmp_path):
+    """export -> import -> file tree persists no RDD of its own, and AQE
+    coalesces each resolved dataset and dimension root of the export into
+    one file at this scale.  AQE never coalesces a cached plan: an export
+    that caches them writes a file per non-empty shuffle partition."""
+    # fx.build_datasets persists its shared base on first use, by design
+    fx.build_datasets(spark, SMOKE_SF).count()
+    persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    exp = _do_export(spark, str(tmp_path / "exp"))
+    for table in ("datasets/orders_raw", "datasets/orders_calib",
+                  "dimensions/customer", "dimensions/nation"):
+        (root,) = exp.manifest()["tables"][table]
+        files = list((exp.root / root).rglob("*.parquet"))
+        assert len(files) == 1, (table, len(files))
+    tgt = run_import(spark, str(exp.root), str(tmp_path / "repo"), path_mapper="rsp")
+    generate_file_tree(
+        tgt.read(spark, "datastore_records"), str(tmp_path / "tree"), "/data/store"
+    )
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert persisted <= persisted_before
+
+
 def test_atomic_commit_staging_invisible(spark, export_cat, tmp_path):
     """Staged-but-uncommitted writes are invisible to readers (G3)."""
     cat = Catalog(tmp_path / "cat")
@@ -190,7 +212,9 @@ def test_path_mappers(spark, export_cat):
 
 
 def test_file_tree_symlinks(spark, export_cat, tmp_path):
-    """K12: symlink farm materializes; re-running is a no-op (idempotent)."""
+    """K12: symlink farm materializes; re-running is a no-op (idempotent);
+    records sharing a (source, link) pair count once; a pre-existing link
+    that points elsewhere is an error and is left as it was."""
     rec = export_cat.read(spark, "datastore_records")
     rel = rec.filter(~F.col("path").startswith("file://")).limit(25)
     ab = rec.filter(F.col("path").startswith("file://")).limit(25)
@@ -209,6 +233,20 @@ def test_file_tree_symlinks(spark, export_cat, tmp_path):
     assert any(os.readlink(p).startswith("/data/store/") for p in links)
     # second run: FileExistsError tolerated, same count
     assert generate_file_tree(rec, str(tree), "/data/store") == n
+    # every record twice: the pairs are distinct, so each counts once
+    twice = rec.withColumn("copy", F.explode(F.array(F.lit(1), F.lit(2)))).drop("copy")
+    dup_tree = tmp_path / "dup"
+    assert generate_file_tree(twice, str(dup_tree), "/data/store") == n
+    assert sum(len(fs) for _, _, fs in os.walk(dup_tree)) == n
+    # a conflicting link raises, naming both targets, and is not replaced
+    victim = sorted(links)[0]
+    want = os.readlink(victim)
+    os.remove(victim)
+    os.symlink("/elsewhere/file", victim)
+    with pytest.raises(FileExistsError) as err:
+        generate_file_tree(rec, str(tree), "/data/store")
+    assert "/elsewhere/file" in str(err.value) and want in str(err.value)
+    assert os.readlink(victim) == "/elsewhere/file"
 
 
 def test_registry_runtime_struct_types(spark):
@@ -902,27 +940,33 @@ def test_catalog_compact_retries_over_concurrent_append(spark, tmp_path):
     assert len(cat.manifest()["tables"]["t"]) == 1
 
 
+def _assert_same_table(got, want) -> None:
+    """Same column names and types, in order, and the same row multiset."""
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_catalog_multi_root_partition_type_pinned(spark, tmp_path):
     """Per-root hive partition-column type inference can diverge (all-numeric
     values infer int); multi-root reads pin every root to the first root's
-    types so the union neither fails nor silently changes the column type."""
+    types so the union neither fails nor silently changes the column type.
+    ``stage`` returns its staged root with the written types: flat,
+    partitioned (the '7' root keeps ``run`` a string) and empty writes."""
     from dp1_data_wrangling_spark.plans.catalog import Catalog
 
     cat = Catalog(str(tmp_path / "cat"))
+    first = spark.range(5).selectExpr("id", "'run_a' as run")
     txn = cat.begin()
-    txn.stage(
-        "t",
-        spark.range(5).selectExpr("id", "'run_a' as run"),
-        partition_by=["run"],
-    )
+    _assert_same_table(txn.stage("t", first, partition_by=["run"]), first)
     cat.commit(txn)
+    second = spark.range(5, 10).selectExpr("id", "'7' as run")
     txn = cat.begin()
-    txn.stage(
-        "t",
-        spark.range(5, 10).selectExpr("id", "'7' as run"),
-        mode="append",
-        partition_by=["run"],
-    )
+    staged = txn.stage("t", second, mode="append", partition_by=["run"])
+    _assert_same_table(staged, second)
+    empty = first.filter("id < 0")
+    for name, df, parts in (("flat", first, None), ("empty", empty, None),
+                            ("empty_runs", empty, ["run"])):
+        _assert_same_table(txn.stage(name, df, partition_by=parts), df)
     cat.commit(txn)
     df = cat.read(spark, "t")
     assert dict(df.dtypes)["run"] == "string"
