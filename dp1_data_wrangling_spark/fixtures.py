@@ -227,18 +227,6 @@ def build_dim_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {
-        "collections": build_collections(spark),
-        "collection_chains": build_collection_chains(spark),
-        "datasets": build_datasets(spark, sf_dir),
-        "associations": build_associations(spark, sf_dir),
-        "datastore_records": build_datastore_records(spark, sf_dir),
-        "dim_customer": build_dim_customer(spark, sf_dir),
-        "dim_nation": build_dim_nation(spark, sf_dir),
-    }
-
-
 # --- DuckDB oracle equivalents -------------------------------------------
 # Every oracle query is prefixed with this CTE block, making each oracle
 # statement self-contained over the driver's pre-registered base views.

@@ -2,8 +2,8 @@
 
 The reference's TimespanArrowType is a struct of two int64 nanoseconds
 (datasets_parquet.py:39-49, 119-121).  Spark TimestampType is µs-precision,
-so nanosecond bounds live as LongType pairs and are only cast to timestamps
-for *display* (never for comparison — SURVEY.md §7.4.1).
+so nanosecond bounds live as LongType pairs and are never compared as
+timestamps (SURVEY.md §7.4.1).
 """
 
 from __future__ import annotations
@@ -12,25 +12,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def timespan_struct(begin_nsec: Column, end_nsec: Column) -> Column:
-    """C2: pack bounds into the reference's timespan struct shape."""
-    return F.struct(
-        begin_nsec.cast("long").alias("begin_nsec"),
-        end_nsec.cast("long").alias("end_nsec"),
-    )
-
-
 def epoch_ns(ts: Column) -> Column:
     """Timestamp -> int64 ns since epoch (exact integer arithmetic; a
     double cast would lose precision above 2^53)."""
     return (F.unix_micros(ts.cast("timestamp")) * F.lit(1000)).cast("long")
-
-
-def ns_to_display_ts(nsec: Column) -> Column:
-    """Display-only ns -> µs timestamp (truncates below µs; never compare).
-
-    Exact integer division via decimal math — plain ``/`` is DOUBLE
-    division, and at ~1e18 ns a double's ulp is ~222 ns, corrupting even
-    the µs display value."""
-    us = (nsec.cast("decimal(38,0)") / F.lit(1000)).cast("long")
-    return F.timestamp_micros(us)

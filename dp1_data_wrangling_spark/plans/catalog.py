@@ -33,12 +33,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import uuid
 from dataclasses import dataclass, field
+from decimal import Decimal
 from pathlib import Path
 
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "MANIFEST.json"
@@ -420,22 +420,6 @@ def _bloom_positions(value: object) -> list[int]:
     ]
 
 
-def _bloom_literal_ok(kind: str, value: object) -> bool:
-    """Pruning is sound only when the probe literal's str() is guaranteed
-    to equal Spark's canonical string for matching column values.  That
-    holds for an int literal against an integer column ('i') and a str
-    literal against a string column ('s') — NOT for a float literal
-    against an int column (``uid = 202.0`` matches uid=202 in Spark but
-    str() gives '202.0'), nor an int literal against a string column
-    (``col = 5`` matches '05' under Spark's cast).  Mismatches skip the
-    bloom and fall through to the full filter."""
-    if kind == "i":
-        return isinstance(value, int) and not isinstance(value, bool)
-    if kind == "s":
-        return isinstance(value, str)
-    return False
-
-
 def _bloom_hex(positions: list[int]) -> str:
     bits = bytearray(_BLOOM_NBITS // 8)
     for p in positions:
@@ -450,206 +434,141 @@ def _bloom_maybe_contains(hex_filter: str, value: object) -> bool:
     )
 
 
-# Zone-map predicate grammar: conjunctions of ``col op literal`` with
-# numeric or single-quoted string literals.  Anything richer (OR,
-# parentheses, NOT, IN, functions) disables pruning for the whole
-# expression — conservative and therefore always sound; the filter
+# -- root pruning over Spark's own parse of the predicate ------------------
+# ``where`` is parsed by the SQL parser ``filter`` itself uses, so quoting,
+# precedence and literal types are Spark's.  ``_excludes`` walks that tree
+# per root and is True only when no row of the root can satisfy it; any
+# node it does not know excludes nothing — sound, because the filter
 # itself still applies in full.
-_ZONE_CONJUNCT = re.compile(
-    r"^\s*(\w+)\s*(<=|>=|==|=|<|>)\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$"
-)
+_CMP = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
 
 
-def _mask_quoted(where: str) -> str | None:
-    """Replace the CONTENTS of single-quoted spans with NUL bytes (same
-    length, so offsets into the original still line up).  Keyword and
-    split-point scanning then cannot be fooled by literals like
-    ``'x and y'`` or ``'(or)'``.  Returns None on an unbalanced quote —
-    the pruner bails out entirely (sound: filter-only)."""
-    out: list[str] = []
-    in_quote = False
-    for ch in where:
-        if ch == "'":
-            in_quote = not in_quote
-            out.append(ch)
-        else:
-            out.append("\x00" if in_quote else ch)
-    if in_quote:
+def _cls(node: dict) -> str:
+    return node["class"].rsplit(".", 1)[-1]
+
+
+def _parse_where(where: str) -> dict | None:
+    """Spark's parse tree of ``where`` as nested dicts (``children`` in
+    Catalyst order), or None if it does not parse."""
+    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
+    try:
+        flat = iter(json.loads(parser.parseExpression(where).toJSON()))
+    except ParseException:
         return None
-    return "".join(out)
+
+    def build() -> dict:  # toJSON lists the nodes in pre-order
+        node = next(flat)
+        node["children"] = [build() for _ in range(node["num-children"])]
+        return node
+
+    return build()
 
 
-_NUM_LIT = r"-?\d+(?:\.\d+)?"
-_ANY_LIT = rf"(?:'[^']*'|{_NUM_LIT})"
-# BETWEEN consumes its own AND, so it must be recognized BEFORE the
-# conjunct split; numeric bounds only (string BETWEEN is rare and the
-# fallback is filter-only, sound).
-_BETWEEN = re.compile(
-    rf"(?i)\b(?!not\b|and\b|or\b)(\w+)\s+between\s+({_NUM_LIT})\s+and\s+({_NUM_LIT})"
-)
-# IN-lists carry their own parentheses; recognized before the paren guard.
-# Both patterns refuse NOT/AND/OR as the column so 'x NOT BETWEEN ...'
-# leaves its keyword behind for the bail-out guard instead of matching
-# with col='NOT' (a negated clause must never prune positively).
-_IN_LIST = re.compile(
-    rf"(?i)\b(?!not\b|and\b|or\b)(\w+)\s+in\s*"
-    rf"\(\s*{_ANY_LIT}(?:\s*,\s*{_ANY_LIT})*\s*\)"
-)
-# IS [NOT] NULL clauses (r13): consumed before the NOT bail-out guard —
-# the NOT inside "is not null" is OUR clause, not a negation of one.
-# IS NOT NULL is recognized first so the plain IS NULL pattern can never
-# match inside it.  A negated wrapper ("NOT (x IS NULL)") still bails:
-# its own NOT/parens survive consumption and trip the guard, discarding
-# every collected conjunct (the existing soundness mechanism).
-_IS_NOT_NULL = re.compile(
-    r"(?i)\b(?!not\b|and\b|or\b)(\w+)\s+is\s+not\s+null\b"
-)
-_IS_NULL = re.compile(r"(?i)\b(?!not\b|and\b|or\b)(\w+)\s+is\s+null\b")
+def _column(node: dict) -> str | None:
+    """The name of a single-part column reference, else None."""
+    if _cls(node) == "UnresolvedAttribute" and ", " not in node["nameParts"]:
+        return node["nameParts"][1:-1]  # rendered as "[a, b]"
+    return None
 
 
-def _parse_literal(lit: str) -> object:
-    if lit.startswith("'"):
-        return lit[1:-1]
-    if "." in lit:
-        return float(lit)
-    return int(lit)
+def _literal(node: dict) -> tuple[str | None, object]:
+    """(kind, value) of a literal: kind "i" for the integer family, "d"
+    decimal, "f" double, "s" string, None for anything else — NULL, and
+    FLOAT, which compares in float32 when ANSI mode is off."""
+    t, v = node["dataType"], node["value"]
+    if v is None:
+        return None, None
+    if t in ("byte", "short", "integer", "long"):
+        return "i", int(v)
+    if t.startswith("decimal"):
+        return "d", Decimal(v)
+    if t == "double":
+        return "f", float(v)
+    return ("s", v) if t == "string" else (None, None)
 
 
-def _zone_conjuncts(where: str) -> list[tuple[str, str, object]]:
-    """Parse ``where`` into prunable (col, op, value) conjuncts —
-    ``op`` ∈ {<, <=, >, >=, =, ==, in} (``in`` carries a value list;
-    BETWEEN lowers to >= and <=) — or [] if the expression contains
-    constructs the pruner cannot reason about.  Keyword guards and AND
-    split points are computed on a quote-masked copy so string literals
-    containing 'and'/'or'/parens can neither disable pruning nor
-    synthesize a false conjunct."""
-    masked = _mask_quoted(where)
-    if masked is None:
-        return []
-    out: list[tuple[str, str, object]] = []
-
-    def consume(masked_text: str, pattern: re.Pattern, handler) -> str:
-        # recognize a clause on the MASKED text, hand the ORIGINAL span to
-        # the handler, and blank the span in both views so later guards /
-        # splits never see it
-        nonlocal where
-        for m in reversed(list(pattern.finditer(masked_text))):
-            handler(where[m.start() : m.end()])
-            blank = " " * (m.end() - m.start())
-            masked_text = masked_text[: m.start()] + blank + masked_text[m.end() :]
-            where = where[: m.start()] + blank + where[m.end() :]
-        return masked_text
-
-    def on_between(clause: str) -> None:
-        m = _BETWEEN.match(clause.strip())
-        if m:
-            col, lo, hi = m.groups()
-            out.append((col, ">=", _parse_literal(lo)))
-            out.append((col, "<=", _parse_literal(hi)))
-
-    def on_in(clause: str) -> None:
-        m = re.match(r"(?i)\s*(\w+)\s+in\s*\((.*)\)\s*$", clause, re.DOTALL)
-        if m:
-            col, body = m.groups()
-            vals = [
-                _parse_literal(v.strip())
-                for v in re.findall(rf"{_ANY_LIT}", body)
-            ]
-            if vals:
-                out.append((col, "in", vals))
-
-    def on_is_not_null(clause: str) -> None:
-        m = re.match(r"(?i)\s*(\w+)\s+is\s+not\s+null\s*$", clause)
-        if m:
-            out.append((m.group(1), "isnotnull", None))
-
-    def on_is_null(clause: str) -> None:
-        m = re.match(r"(?i)\s*(\w+)\s+is\s+null\s*$", clause)
-        if m:
-            out.append((m.group(1), "isnull", None))
-
-    masked = consume(masked, _BETWEEN, on_between)
-    masked = consume(masked, _IN_LIST, on_in)
-    masked = consume(masked, _IS_NOT_NULL, on_is_not_null)
-    masked = consume(masked, _IS_NULL, on_is_null)
-    if re.search(r"(?i)\bor\b|\bnot\b|\bin\b|\bbetween\b|[()]", masked):
-        return []  # something the grammar doesn't cover — filter-only
-    # split offsets from the masked text, substrings from the original
-    bounds = [0]
-    for m in re.finditer(r"(?i)\band\b", masked):
-        bounds.extend([m.start(), m.end()])
-    bounds.append(len(where))
-    parts = [
-        where[bounds[i] : bounds[i + 1]] for i in range(0, len(bounds), 2)
-    ]
-    for part in parts:
-        m = _ZONE_CONJUNCT.match(part)
-        if not m:
-            continue
-        col, op, lit = m.groups()
-        out.append((col, op, _parse_literal(lit)))
-    return out
-
-
-def _zone_excludes(
-    stats: dict[str, list] | None, conjuncts: list[tuple[str, str, object]]
-) -> bool:
-    """True iff some conjunct provably matches no row of a root with the
-    given per-column [min, max] stats.  Missing stats (undeclared column,
-    root written before the declaration, non-serializable type) keep the
+def _excludes(node: dict, zones: dict, blooms: dict) -> bool:
+    """True iff the parsed predicate provably matches no row of a root
+    with per-column zone stats ``[min, max, n_nulls, n_rows]`` and Bloom
+    filters ``{"h": hex bitmap, "t": "i" | "s"}``.  Missing stats
+    (undeclared column, root written before the declaration) keep the
     root — absence of evidence never prunes."""
-    if not stats:
+    cls, kids = _cls(node), node["children"]
+    if cls == "And":
+        return any(_excludes(k, zones, blooms) for k in kids)
+    if cls == "Or":
+        return all(_excludes(k, zones, blooms) for k in kids)
+    if cls in _CMP:
+        return _cmp_excludes(_CMP[cls], kids[0], kids[1], zones, blooms)
+    if cls == "In":  # x IN (a, b): x = a OR x = b
+        # Spark casts x and every element to ONE common type, so the
+        # pairwise rules hold only when all elements are of one kind:
+        # ``x IN (0e0, 9007199254740993)`` compares in double
+        kinds = {_cls(k) == "Literal" and _literal(k)[0] for k in kids[1:]}
+        return len(kinds) == 1 and all(
+            _cmp_excludes("=", kids[0], k, zones, blooms) for k in kids[1:]
+        )
+    if cls == "UnresolvedFunction" and node["nameParts"] == "[between]":
+        # Spark 4.1 parses BETWEEN as a function call
+        return len(kids) == 3 and (
+            _cmp_excludes(">=", kids[0], kids[1], zones, blooms)
+            or _cmp_excludes("<=", kids[0], kids[2], zones, blooms)
+        )
+    if cls in ("IsNull", "IsNotNull"):
+        rng = zones.get(_column(kids[0]))
+        if not rng or len(rng) < 4:
+            return False  # legacy [min, max] entry: no NULL evidence
+        n_nulls, n_rows = rng[2], rng[3]
+        return n_nulls == 0 if cls == "IsNull" else n_nulls == n_rows
+    return False  # Not, functions, casts, ...
+
+
+def _cmp_excludes(
+    op: str, left: dict, right: dict, zones: dict, blooms: dict
+) -> bool:
+    """``column op literal``, compared in the type Spark compares them
+    in; any other shape (``5 > ts``) excludes nothing."""
+    col = _column(left)
+    if col is None or _cls(right) != "Literal":
         return False
-    for col, op, val in conjuncts:
-        rng = stats.get(col)
-        if not rng:
-            continue
-        lo, hi = rng[0], rng[1]
-        if op in ("isnull", "isnotnull"):
-            if len(rng) < 4:
-                continue  # legacy 2-element entry: no NULL evidence
-            n_nulls, n_rows = rng[2], rng[3]
-            if op == "isnull" and n_nulls == 0:
-                return True
-            if op == "isnotnull" and n_nulls == n_rows:
-                return True
-            continue
-        if lo is None:
-            # no range evidence — but an all-NULL (or empty) root has no
-            # non-NULL value at all, so NO range/equality/IN predicate
-            # can match it (NULL never satisfies <,<=,>,>=,=,IN)
-            if len(rng) >= 4 and rng[2] == rng[3]:
-                return True
-            continue
-        str_stat = isinstance(lo, str)
-        if op == "in":
-            # prunable only if EVERY type-matched value misses the range
-            # AND no value is type-mismatched (Spark's cast could match)
-            vals = val
-            if vals and all(
-                isinstance(v, str) == str_stat and (v < lo or v > hi)
-                for v in vals
-            ):
-                return True
-            continue
-        if str_stat != isinstance(val, str):
-            continue  # type-mismatched literal: let Spark handle the cast
-        if op in ("=", "=="):
-            if val < lo or val > hi:
-                return True
-        elif op == ">":
-            if hi <= val:
-                return True
-        elif op == ">=":
-            if hi < val:
-                return True
-        elif op == "<":
-            if lo >= val:
-                return True
-        elif op == "<=":
-            if lo > val:
-                return True
-    return False
+    kind, v = _literal(right)
+    ent = blooms.get(col)
+    # the bitmap hashes Spark's cast-to-string, which equals str() only
+    # for an integer literal on an integer filter ("i") and a string
+    # literal on a string filter ("s"): ``uid = 202.0`` matches uid 202
+    # but hashes '202.0'
+    if op == "=" and ent and ent["t"] == kind:
+        if not _bloom_maybe_contains(ent["h"], v):
+            return True  # definitely absent
+    rng = zones.get(col)
+    if not rng:
+        return False
+    lo, hi = rng[0], rng[1]
+    if lo is None:
+        # no range evidence — but an all-NULL (or empty) root has no
+        # non-NULL value, and NULL never satisfies a comparison
+        return len(rng) >= 4 and rng[2] == rng[3]
+    stat = {str: "s", int: "i", float: "f"}.get(type(lo))  # bool: None
+    if stat is None or kind is None or (stat == "s") != (kind == "s"):
+        return False  # a pairing Spark resolves through a cast
+    if "f" in (stat, kind):
+        if kind == "i" and abs(v) > 2**24:
+            return False  # a FLOAT column compares it in float32 (non-ANSI)
+        lo, hi, v = float(lo), float(hi), float(v)
+    # otherwise exact: integers, or an integer widened with a decimal
+    return {
+        "=": v < lo or v > hi,
+        "<": lo >= v,
+        "<=": lo > v,
+        ">": hi <= v,
+        ">=": hi < v,
+    }[op]
 
 
 class Catalog:
@@ -757,7 +676,8 @@ class Catalog:
         Every subsequent ``Transaction.stage`` computes per-root min/max
         for these columns (one combinable aggregate over the staged
         files) and records them in the manifest; ``read(where=...)`` then
-        skips whole commit roots whose range excludes a predicate —
+        skips whole commit roots on which the predicate provably matches
+        no row (comparisons, IN, BETWEEN, IS [NOT] NULL under AND/OR) —
         BEFORE any file is opened.  This is the manifest-level tier of
         data skipping the reference gets from Postgres indexes: parquet
         row-group stats only help after a file's footer is fetched, which
@@ -885,11 +805,11 @@ class Catalog:
         (``version`` from ``history()`` — time travel).
 
         ``where`` applies a SQL predicate AND, when the table has
-        declared zone-map columns, skips whole commit roots whose
-        recorded [min, max] provably excludes the predicate (simple
-        ``col op literal`` conjunctions; anything richer falls back to
-        filter-only — always sound, because the filter is applied in
-        full either way)."""
+        declared zone-map or Bloom columns, skips whole commit roots on
+        which Spark's parse of the predicate provably matches no row
+        (``prune_roots``); a predicate it cannot reason about scans every
+        root — always sound, because the filter is applied in full
+        either way."""
         m = self.manifest(version)
         if table not in m["tables"]:
             raise KeyError(f"catalog {self.root}: no table {table!r}")
@@ -986,7 +906,9 @@ class Catalog:
         self, table: str, where: str, *, version: int | None = None
     ) -> list[str]:
         """The subset of ``table``'s commit roots that survive zone-map
-        pruning for ``where`` (the list ``read(where=...)`` will scan).
+        and Bloom pruning for ``where`` (the list ``read(where=...)`` will
+        scan).  ``where`` is parsed by the active session's SQL parser; a
+        predicate that does not parse keeps every root.
         Exposed for tests and for capacity planning (pruned-root counts
         are the skipping metric at 100 TB)."""
         return self._prune_roots_m(self.manifest(version), table, where)
@@ -996,41 +918,15 @@ class Catalog:
         the OCC loops (update/delete) need, where the snapshot must stay
         pinned across read, rewrite, and conflict-checked commit."""
         rels = m["tables"][table]
-        conjuncts = _zone_conjuncts(where)
-        if not conjuncts:
-            return list(rels)
         zones = m.get("zones", {}).get(table, {})
         blooms = m.get("blooms", {}).get(table, {})
-        # equality-family conjuncts feed the blooms: plain = probes one
-        # value; IN probes each — prunable only when EVERY value is
-        # type-sound for the filter and definitely absent
-        eq_conjuncts = [
-            (c, [v] if op in ("=", "==") else v)
-            for c, op, v in conjuncts
-            if op in ("=", "==", "in")
-        ]
-
-        def bloom_excludes(rel: str) -> bool:
-            stats = blooms.get(rel)
-            if not stats:
-                return False
-            for c, vals in eq_conjuncts:
-                ent = stats.get(c)
-                if not ent:
-                    continue
-                if vals and all(
-                    _bloom_literal_ok(ent["t"], v)
-                    and not _bloom_maybe_contains(ent["h"], v)
-                    for v in vals
-                ):
-                    return True
-            return False
-
+        tree = _parse_where(where) if zones or blooms else None
+        if tree is None:
+            return list(rels)
         return [
             r
             for r in rels
-            if not _zone_excludes(zones.get(r), conjuncts)
-            and not bloom_excludes(r)
+            if not _excludes(tree, zones.get(r) or {}, blooms.get(r) or {})
         ]
 
     def table_schema(self, spark: SparkSession, table: str):
@@ -1297,8 +1193,9 @@ class Catalog:
         stats prune the rest, which ride into the new version by
         reference (the RESTORE/CLONE zero-copy mechanism), so a one-row
         DELETE on a 100 TB table rewrites one root, not 100 TB.  Roots
-        without stats (or an unparsable predicate) conservatively count
-        as touched — worst case is the old full rewrite.  A predicate no
+        the predicate cannot be ruled out on (no stats, or no prunable
+        part) conservatively count as touched — worst case is the old
+        full rewrite.  A predicate no
         root can match commits a pure-manifest no-op version.  The
         rewrite itself streams scan -> filter -> write with no shuffle
         (unless re-laying-out via ``sort_by``/``partition_by``)."""
@@ -1563,10 +1460,10 @@ class Catalog:
         Scale (r10, root-scoped): like :meth:`delete`, only the roots
         the predicate can match (zone-map/Bloom pruning) are rewritten;
         untouched roots carry into the new version by reference — a
-        one-row UPDATE on a 100 TB table rewrites one root.  Roots
-        without stats or an unparsable predicate conservatively rewrite
-        everything (the old behavior); a predicate no root can match
-        commits a pure-manifest no-op version."""
+        one-row UPDATE on a 100 TB table rewrites one root.  Roots the
+        predicate cannot be ruled out on (no stats, or no prunable part)
+        are rewritten; a predicate no root can match commits a
+        pure-manifest no-op version."""
         from pyspark.sql import functions as F
 
         if not assignments:

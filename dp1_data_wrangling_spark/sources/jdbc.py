@@ -17,7 +17,7 @@ for option construction (unit test); the read path is standard Spark.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def registry_reader(
@@ -53,10 +53,3 @@ def registry_reader(
     for k, v in (properties or {}).items():
         reader = reader.option(k, v)
     return reader
-
-
-def load_registry_table(
-    spark: SparkSession, url: str, table: str, **kwargs
-) -> DataFrame:
-    """Convenience: build the reader and load (requires a live database)."""
-    return registry_reader(spark, url, table, **kwargs).load()

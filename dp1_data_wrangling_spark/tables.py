@@ -273,14 +273,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 )
     _TABLE_CACHE[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table as a dict of DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -617,6 +617,18 @@ def test_fuse_stages_matches_operator_composition(spark):
     assert sorted(fused.collect(), key=key) == sorted(
         composed.collect(), key=key
     )
+    # the synthetic_*_batches stages coerce each id with int(): an int or
+    # string media_id column fuses to exactly the rows of the long input
+    for dtype in ("int", "string"):
+        cast_ids = ids.select(F.col("media_id").cast(dtype).alias("media_id"))
+        fused_cast = mm.fuse_stages(
+            cast_ids,
+            [mm.synthetic_png_batches(), mm.decode_stats_batches(max_side=8)],
+            mm.DECODE_STATS_SCHEMA,
+        )
+        assert sorted(fused_cast.collect(), key=key) == sorted(
+            fused.collect(), key=key
+        )
     fused_fr = mm.fuse_stages(
         ids,
         [mm.synthetic_video_batches(), mm.video_frames_batches()],

@@ -416,26 +416,21 @@ def test_catalog_read_skips_roots(spark, tmp_path):
     assert cat.read(spark, "t", where="ts IN (5, 205)").count() == 2
     # negated forms never prune (bail-out guard)
     assert len(cat.prune_roots("t", "ts NOT BETWEEN 0 AND 5")) == 4
-    # un-prunable expressions fall back to filter-only (sound)
-    assert len(cat.prune_roots("t", "ts = 5 OR ts = 205")) == 4
+    # OR keeps a root when either side can match it
+    assert len(cat.prune_roots("t", "ts = 5 OR ts = 205")) == 2
     assert cat.read(spark, "t", where="ts = 5 OR ts = 205").count() == 2
-    # SOUNDNESS (r8 review): 'and'/'or'/parens INSIDE string literals must
-    # neither synthesize a false conjunct nor disable real ones
-    from dp1_data_wrangling_spark.plans.catalog import _zone_conjuncts
-
-    # one whole-literal conjunct — NOT a synthesized (ts, =, 5)
-    assert _zone_conjuncts("tag = 'x and ts = 5 and y'") == [
-        ("tag", "=", "x and ts = 5 and y")
-    ]
+    # SOUNDNESS: 'and'/'or'/parens INSIDE string literals must neither
+    # synthesize a false comparison nor disable real ones
+    # one whole-literal string equality (outside every tag range) — NOT a
+    # synthesized ts = 5, which would keep the [0, 100) root
+    assert cat.prune_roots("t", "tag = 'x and ts = 5 and y'") == []
     assert cat.read(spark, "t", where="tag = 'x and ts = 5 and y'").count() == 0
-    # a quoted '(or)' must not disable the real ts conjuncts around it
-    assert _zone_conjuncts("tag = '(or)' AND ts >= 200 AND ts < 300") == [
-        ("tag", "=", "(or)"),
-        ("ts", ">=", 200),
-        ("ts", "<", 300),
-    ]
-    # unbalanced quote: bail out of pruning entirely, filter still applies
-    assert _zone_conjuncts("tag = 'unterminated") == []
+    # a quoted '(or)' must not disable the real ts range around it
+    w = "tag >= '(or)' AND ts >= 200 AND ts < 300"
+    assert len(cat.prune_roots("t", w)) == 1
+    assert cat.read(spark, "t", where=w).count() == 100
+    # unbalanced quote: no parse, every root kept, no error from pruning
+    assert cat.prune_roots("t", "tag = 'unterminated") == rels
     # overwrite resets stats; roots written BEFORE declaration never prune
     tx = cat.begin()
     tx.stage(
@@ -451,6 +446,30 @@ def test_catalog_read_skips_roots(spark, tmp_path):
     cat.drop_zone_map("t")
     assert "zones" not in cat.manifest()
     assert len(cat.prune_roots("t", "ts >= 99999")) == 1  # no stats, no prune
+    # literals compare in the type Spark compares in: a bigint against a
+    # decimal is exact (a float parse would read 2**53 + 1 as 2**53 and
+    # prune the 2**53 root), against a double it is cast to double
+    cat = Catalog(str(tmp_path / "big"))
+    cat.set_zone_map("b", ["x"])
+    for v in (9007199254741000, 2**53, 2**53 + 1):
+        tx = cat.begin()
+        tx.stage("b", spark.range(1).select(F.lit(v).cast("long").alias("x")))
+        cat.commit(tx)
+        if v == 2**53:
+            w = "x < 9007199254740993.0"
+            assert cat.read(spark, "b").filter(w).count() == 1
+            assert cat.read(spark, "b", where=w).count() == 1
+            # IN casts x and every element to one common type: a double
+            # element makes it double, where 2**53 + 1 reads as 2**53
+            for w in (
+                "x IN (0e0, 9007199254740993)",
+                "x IN (0e0, 9007199254740993.0)",
+            ):
+                assert cat.read(spark, "b").filter(w).count() == 1
+                assert cat.read(spark, "b", where=w).count() == 1
+    w = "x <= 9007199254740992e0"  # matches 2**53 + 1 through the cast
+    assert cat.read(spark, "b").filter(w).count() == 2
+    assert cat.read(spark, "b", where=w).count() == 2
 
 
 def test_catalog_bloom_filter_skips_roots(spark, tmp_path):
@@ -2405,10 +2424,9 @@ def test_null_count_zone_skipping(spark, tmp_path):
     """NULL-count zone maps (r13): ``IS NULL`` prunes roots with zero
     NULLs, ``IS NOT NULL`` prunes all-NULL roots (which now RECORD
     stats instead of being skipped), legacy 2-element entries never
-    prune on NULL evidence, and negated/parenthesized forms still bail
-    out — results always identical to the full-scan filter."""
+    prune on NULL evidence, and negated forms never prune — results
+    always identical to the full-scan filter."""
     from dp1_data_wrangling_spark.plans import Catalog
-    from dp1_data_wrangling_spark.plans.catalog import _zone_conjuncts
 
     cat = Catalog(str(tmp_path / "cat"))
     cat.set_zone_map("t", ["v"])
@@ -2435,22 +2453,21 @@ def test_null_count_zone_skipping(spark, tmp_path):
     assert zones[rels[2]]["v"] == [None, None, 100, 100]
 
     # IS NULL drops the no-NULL root; IS NOT NULL drops the all-NULL one
-    assert _zone_conjuncts("v IS NULL") == [("v", "isnull", None)]
-    assert _zone_conjuncts("v is not null") == [("v", "isnotnull", None)]
     assert len(cat.prune_roots("t", "v IS NULL")) == 2
     assert len(cat.prune_roots("t", "v IS NOT NULL")) == 2
+    assert cat.prune_roots("t", "v is not null") == rels[:2]
     assert cat.read(spark, "t", where="v IS NULL").count() == 150
     assert cat.read(spark, "t", where="v IS NOT NULL").count() == 150
-    # composes with range conjuncts: IS NOT NULL + range hits one root
+    # composes with range comparisons: IS NOT NULL + range hits one root
     assert len(cat.prune_roots("t", "v IS NOT NULL AND v >= 100")) == 1
     got = cat.read(spark, "t", where="v IS NOT NULL AND v >= 100")
     assert got.count() == 50
-    # negation / parens still bail out entirely (sound: filter-only)
-    assert _zone_conjuncts("NOT (v IS NULL)") == []
+    # negation never prunes (sound: filter-only)
     assert len(cat.prune_roots("t", "NOT (v IS NULL)")) == 3
     assert cat.read(spark, "t", where="NOT (v IS NULL)").count() == 150
-    # a quoted literal containing ' is null ' must not synthesize one
-    assert _zone_conjuncts("tag = 'v is null'") == [("tag", "=", "v is null")]
+    # a quoted literal containing ' is null ' is an equality on an
+    # unstatted column, not a v IS NULL that would drop the no-NULL root
+    assert len(cat.prune_roots("t", "tag = 'v is null'")) == 3
 
     # legacy 2-element manifest entries: readable, never NULL-prune
     import json as _json

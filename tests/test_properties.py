@@ -589,38 +589,60 @@ def test_y4m_codec_roundtrip_property(n, h, w, seed):
 
 # --- zone/bloom pruning soundness (round 8) --------------------------------
 # The one failure mode a data-skipping layer must never have is a missing
-# row: for ANY predicate the pruner accepts, read(where=...) must equal
-# the full-scan filter.  Generate predicates across the whole supported
-# grammar (comparisons, BETWEEN, IN, AND chains) plus adversarial string
-# literals ('and'/'or'/parens/keywords inside quotes) and OR forms that
-# must fall back to filter-only.
+# row: for ANY predicate, read(where=...) must equal the full-scan filter.
+# Generate predicates over comparisons (a literal on the left never
+# prunes, but must stay sound), BETWEEN, IN and IS [NOT] NULL, nested
+# under AND, OR, NOT and parentheses, with adversarial string literals
+# ('and'/'or'/parens/keywords inside quotes) and integer, decimal and
+# double literals near 2**53, where a bigint compared in the wrong type
+# rounds.
 
 _INT_LIT = st.one_of(
     st.integers(-50, 350).map(str),
     st.integers(-50, 350).map(lambda v: f"{v}.0"),
+)
+_BIG_NUM = st.one_of(
+    st.integers(2**53 - 120, 2**53 + 170),
+    # the second root ends at 2**53 + 48, which 2**53 + 48.5 and
+    # 2**53 + 49 round onto as doubles
+    st.sampled_from([2**53 + 49, 2**53 + 48, 2**53 + 1, 2**53 - 1]),
+)
+_BIG_LIT = st.tuples(_BIG_NUM, st.sampled_from(["", ".0", ".5", "e0"])).map(
+    lambda t: f"{t[0]}{t[1]}"
 )
 _STR_LIT = st.sampled_from(
     ["a0", "b3", "zq", "x and y", "(or)", "not this", "in between", ""]
 ).map(lambda s: f"'{s}'")
 _CMP_OP = st.sampled_from(["<", "<=", ">", ">=", "="])
 
+
+def _col_atoms(col, lit):
+    return [
+        st.tuples(st.just(col), _CMP_OP, lit).map(" ".join),
+        st.tuples(lit, _CMP_OP, st.just(col)).map(" ".join),
+        st.tuples(lit, lit).map(lambda t: f"{col} BETWEEN {t[0]} AND {t[1]}"),
+        st.lists(lit, min_size=1, max_size=4).map(
+            lambda vs: f"{col} IN ({', '.join(vs)})"
+        ),
+        st.sampled_from([f"{col} IS NULL", f"{col} IS NOT NULL"]),
+    ]
+
+
 _ATOM = st.one_of(
-    st.tuples(st.just("ts"), _CMP_OP, _INT_LIT).map(lambda t: " ".join(t)),
-    st.tuples(st.just("tag"), _CMP_OP, _STR_LIT).map(lambda t: " ".join(t)),
-    st.tuples(st.integers(-50, 350), st.integers(-50, 350)).map(
-        lambda t: f"ts BETWEEN {min(t)} AND {max(t)}"
-    ),
-    st.lists(_INT_LIT, min_size=1, max_size=4).map(
-        lambda vs: f"ts IN ({', '.join(vs)})"
-    ),
-    st.lists(_STR_LIT, min_size=1, max_size=3).map(
-        lambda vs: f"tag IN ({', '.join(vs)})"
-    ),
+    *_col_atoms("ts", _INT_LIT),
+    *_col_atoms("tag", _STR_LIT),
+    *_col_atoms("big", _BIG_LIT),
+    # one double element makes Spark compare the whole IN list in double
+    _BIG_LIT.map(lambda v: f"big IN ({v}, 0e0)"),
 )
-_PREDICATE = st.one_of(
-    st.lists(_ATOM, min_size=1, max_size=3).map(" AND ".join),
-    # OR forms: the pruner must bail to filter-only, never drop rows
-    st.tuples(_ATOM, _ATOM).map(lambda t: f"{t[0]} OR {t[1]}"),
+_PREDICATE = st.recursive(
+    _ATOM,
+    lambda inner: st.one_of(
+        st.tuples(inner, st.sampled_from(["AND", "OR"]), inner).map(" ".join),
+        inner.map(lambda p: f"({p})"),
+        inner.map(lambda p: f"NOT ({p})"),
+    ),
+    max_leaves=4,
 )
 
 _PRUNE_CAT = {}
@@ -634,15 +656,23 @@ def _pruning_catalog(spark, tmp_path_factory):
 
         root = tmp_path_factory.mktemp("prune_prop") / "cat"
         cat = Catalog(str(root))
-        cat.set_zone_map("t", ["ts", "tag"])
-        cat.set_bloom_filter("t", ["ts", "tag"])
-        for lo, tag in [(0, "a"), (100, "b"), (200, "c")]:
+        cat.set_zone_map("t", ["ts", "tag", "big"])
+        cat.set_bloom_filter("t", ["ts", "tag", "big"])
+        # big straddles 2**53 (the second root holds 2**53 - 1 ..
+        # 2**53 + 48) and is NULL on some rows of the first root, none
+        # of the second and all of the third
+        for lo, tag, null in [
+            (0, "a", F.col("id") % 5 == 0),
+            (100, "b", F.lit(False)),
+            (200, "c", F.lit(True)),
+        ]:
             tx = cat.begin()
             tx.stage(
                 "t",
                 spark.range(lo, lo + 50).select(
                     F.col("id").alias("ts"),
                     F.concat(F.lit(tag), F.col("id") % 7).alias("tag"),
+                    F.when(~null, F.lit(2**53 - 101) + F.col("id")).alias("big"),
                 ),
             )
             cat.commit(tx)
