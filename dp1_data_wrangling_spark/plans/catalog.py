@@ -453,10 +453,10 @@ def _cls(node: dict) -> str:
     return node["class"].rsplit(".", 1)[-1]
 
 
-def _parse_where(where: str) -> dict | None:
+def _parse_where(parser, where: str, fold) -> dict | None:
     """Spark's parse tree of ``where`` as nested dicts (``children`` in
-    Catalyst order), or None if it does not parse."""
-    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
+    Catalyst order), with ``fold`` applied to column names, or None if it
+    does not parse."""
     try:
         flat = iter(json.loads(parser.parseExpression(where).toJSON()))
     except ParseException:
@@ -464,6 +464,8 @@ def _parse_where(where: str) -> dict | None:
 
     def build() -> dict:  # toJSON lists the nodes in pre-order
         node = next(flat)
+        if _cls(node) == "UnresolvedAttribute":
+            node["nameParts"] = fold(node["nameParts"])
         node["children"] = [build() for _ in range(node["num-children"])]
         return node
 
@@ -817,12 +819,16 @@ class Catalog:
         if where is None:
             return self._read_rels_with_deletes(spark, m, table, rels)
         kept = self.prune_roots(table, where, version=version)
-        # Every root pruned: keep one so the result carries the table
-        # schema — its rows are eliminated by the (provably
-        # unsatisfiable-on-it) filter anyway.
-        return self._read_rels_with_deletes(
-            spark, m, table, kept or rels[:1]
-        ).filter(where)
+        if kept:
+            return self._read_rels_with_deletes(spark, m, table, kept).filter(where)
+        # Every root pruned: the first root still gives the schema and
+        # resolves ``where``; the zero limit becomes an empty relation in
+        # the optimizer, so no scan job runs.
+        return (
+            self._read_rels_with_deletes(spark, m, table, rels[:1])
+            .filter(where)
+            .limit(0)
+        )
 
     def pending_deletes(
         self, table: str, *, version: int | None = None
@@ -907,8 +913,10 @@ class Catalog:
     ) -> list[str]:
         """The subset of ``table``'s commit roots that survive zone-map
         and Bloom pruning for ``where`` (the list ``read(where=...)`` will
-        scan).  ``where`` is parsed by the active session's SQL parser; a
-        predicate that does not parse keeps every root.
+        scan).  ``where`` is parsed by the active session's SQL parser and
+        its column names match the stats the way the session resolves
+        them (``spark.sql.caseSensitive``); a predicate that does not
+        parse keeps every root.
         Exposed for tests and for capacity planning (pruned-root counts
         are the skipping metric at 100 TB)."""
         return self._prune_roots_m(self.manifest(version), table, where)
@@ -920,13 +928,22 @@ class Catalog:
         rels = m["tables"][table]
         zones = m.get("zones", {}).get(table, {})
         blooms = m.get("blooms", {}).get(table, {})
-        tree = _parse_where(where) if zones or blooms else None
+        if not (zones or blooms):
+            return list(rels)
+        # match column names the way the session resolves them
+        state = SparkSession.active()._jsparkSession.sessionState()
+        fold = str if state.conf().caseSensitiveAnalysis() else str.lower
+        tree = _parse_where(state.sqlParser(), where, fold)
         if tree is None:
             return list(rels)
+
+        def stats(per_root: dict, r: str) -> dict:
+            return {fold(c): v for c, v in (per_root.get(r) or {}).items()}
+
         return [
             r
             for r in rels
-            if not _excludes(tree, zones.get(r) or {}, blooms.get(r) or {})
+            if not _excludes(tree, stats(zones, r), stats(blooms, r))
         ]
 
     def table_schema(self, spark: SparkSession, table: str):

@@ -53,584 +53,40 @@ def test_driver_window_covers_flagship_surface():
     """The driver's correctness run caps at the first 50 registry entries:
     the flagship LLM/streaming surface must sit inside that window, no
     query may be lost by the reorder, and every window entry must be
-    oracle-backed (since r8 the former rows-only ANN top-k forms carry
-    full signature/quantizer replay oracles)."""
+    oracle-backed (the ANN top-k forms carry full signature/quantizer
+    replay oracles)."""
     from dp1_data_wrangling_spark.queries import DRIVER_WINDOW
 
     names = list(REGISTRY)
     assert names[:50] == DRIVER_WINDOW
     assert len(names) == len(set(names))
+    # Window occupants and the audit rotation that put them there are
+    # logged round by round in BASELINE.md.
     flagship = {
-        # doc_exact_dedup rotated out in r8 for event_sequence_match (7x
-        # consecutive driver-green since r1 — the longest streak in the
-        # window; the dedup family keeps minhash/simhash/dup-spans/
-        # clusters in-window and exact dedup stays a bench headline +
-        # parity-held in-repo)
-        # minhash_pairs rotated out in r8 for events_ohlc, then
-        # simhash_pairs for events_kmv_distinct (both ~6x green since
-        # r2; both keep bench-headline + 10x-scaling-probe perf evidence
-        # and the near-dup family keeps doc_dup_spans,
-        # doc_near_dup_curation and doc_fuzzy_pairs in-window)
-        # doc_token_stats rotated out in r8 for doc_gopher_rules (many-round
-        # green since r5; the quality-stat family stays via corpus_stats,
-        # doc_quality_quantile and the gopher screen itself)
-        # embedding_near_dup rotated out in r8 for pq_recall_bound (many-
-        # round green; the embedding near-dup family stays via
-        # embedding_semantic_dedup + cosine_topk)
-        # dedup_clusters rotated out in r8 for events_anomalous_hours
-        # (6x consecutive driver-green since r2; the connected-components
-        # family stays exercised in-window through embedding_semantic_dedup,
-        # doc_near_dup_curation and doc_cluster_safe_split, whose oracles
-        # all replay the transitive closure)
-        # doc_fingerprint rotated out in r8 for doc_link_pagerank (multi-
-        # round green; the row-local text-hash family stays in-window via
-        # the LM scorers + gopher screen) and doc_lang_id rotated out in
-        # r8 for user_scd2_history (multi-round green since r5; both stay
-        # parity-held in-repo every CI run)
-        # lsh_recall_bound / ivf_recall_bound rotated out in r8 for the
-        # event-analytics tier, then cosine_topk for events_gapfill (all
-        # 6x consecutive driver-green since r2 — the longest streaks in
-        # the window; the ANN family keeps six in-window reps: lsh_topk,
-        # ivf_topk, pq/ivf_pq/ivf_kmeans/ivf_index recall bounds, and
-        # cosine_topk stays parity-held in-repo every CI run)
-        # multimodal_resize rotated out in r8 for ivf_pq_recall_bound
-        # (multi-round green; the multimodal family keeps five in-window
-        # reps: decode/png/qoi/audio/video + features), then
-        # multimodal_features itself for doc_fuzzy_pairs (see below)
-        # tumbling_window rotated out in r7 for doc_bpe_tokens (2x green;
-        # session_window keeps the streaming-window family in-window)
-        # session_window rotated out in r8 for doc_link_triangles (see
-        # below)
-        # chain_flatten_distributed (6x green since r2) and
-        # event_correlation (5x green) rotated out in r8 for events_ewma
-        # + events_knn — the two longest surviving streaks after
-        # find_first; the chain family stays via export_plan's in-plan
-        # flatten + in-repo parity, and the streaming tier keeps its
-        # full equivalence-test suite every CI run
-        # round-6 rotation: the curation tier replaced approx_distinct /
-        # approx_percentile (4-5x consecutive driver-green, parity-held)
-        # doc_stable_sample rotated out in r7 for multimodal_audio_frames;
-        # doc_split_assign rotated out in r8 for doc_semantic_decontam
-        # (2x green; global_shuffle + quota + resample keep the family)
-        # doc_curation_pipeline rotated out in r8 for
-        # events_cm_heavy_hitters (multi-round green; bench headline +
-        # the three in-window curation reps keep the family's evidence)
-        # round-6 part 3-5: brand-new operators enter the window directly;
-        # sliding_window and multimodal_frames rotated out (5x green /
-        # rows-only — weakest external evidence; families stay represented
-        # by tumbling/session and features/resize)
-        # doc_source_mix rotated out in r8 for doc_bigram_score (2x green;
-        # the mixing family stays via doc_subword_mix + doc_source_quota)
-        # doc_quality_quantile rotated out in r8 for table_profile (2x
-        # green; the quality-stat family stays via doc_gopher_rules +
-        # corpus_stats and the quantile filter stays parity-held in-repo)
-        # embedding_semantic_dedup rotated out in r8 for
-        # events_scd2_enrich (multi-round green since r3; bench headline
-        # + 3.49x scaling probe keep its perf evidence and the semantic
-        # family keeps doc_semantic_curation, doc_semantic_decontam and
-        # doc_cluster_safe_split in-window)
-        # (doc_bigram_score's r11 rotation note sits with the
-        # orders_value_deciles entry below)
-        # round-7 audit rotation: the in-repo-only tail gains external
-        # sf0.01 evidence; six multi-round-green trivial entries plus
-        # membership_join/asof_lookup_{bucketized,routed} rotated out
-        # (families stay represented by semi_join, asof_lookup, export_plan)
-        # doc_pack_sequences and corpus_top_ngrams rotated out in r9 for
-        # table_expectations + events_hdr_quantiles (both 2x green r7+r8;
-        # packing stays via doc_subword_pack, corpus stats via
-        # corpus_stats — both in-window)
-        # doc_source_quota rotated out in r9 for doc_bm25_topk (2x
-        # green r7+r8; the sampling family stays via
-        # doc_importance_resample + doc_cluster_safe_split)
-        # doc_importance_resample rotated out mid-r9 for bm25_index_topk
-        # (2x green r7+r8; the sampling family stays via
-        # doc_cluster_safe_split + in-repo parity)
-        # doc_dup_spans rotated out mid-r9 for events_changepoints (2x
-        # green r7+r8; the near-dup family keeps doc_near_dup_curation +
-        # doc_fuzzy_pairs in-window)
-        # doc_near_dup_curation rotated out mid-r9 for doc_link_kcore
-        # (2x green r7+r8; the near-dup family keeps doc_fuzzy_pairs and
-        # the curation family keeps doc_cluster_safe_split in-window)
-        # doc_link_kcore rotated out in r11 mid-round 15 for
-        # brand_momentum (2x green r9-r10; the graph family keeps
-        # communities, ppr and link-prediction in-window and kcore's
-        # peeling fixpoint stays parity-held every CI)
-        # bm25_index_topk rotated out in r12 for corpus_ngram_overlap
-        # (3x green r9-r11; retrieval keeps doc_bm25_topk in-window,
-        # the persisted-index round trip stays parity-held in-repo
-        # every CI run plus the streaming text-index twin suite)
-        # events_changepoints rotated out in r13 for corpus_heaps_law
-        # (4x green r9-r12; the CUSUM core keeps its streaming census
-        # twin equivalence suite + in-repo parity every CI run)
         "corpus_ngram_overlap", "corpus_heaps_law", "brand_momentum",
-        # ivf_kmeans_recall_bound rotated out in r9 for events_skyline
-        # (2x green r7+r8; the ANN family keeps lsh_topk, ivf_topk,
-        # ivf_index_recall_bound, pq_recall_bound, ivf_pq_recall_bound)
-        # doc_cluster_safe_split rotated out late-r9 for event_attribution
-        # (2x green r7+r8; the split/curation family stays via
-        # doc_semantic_decontam + in-repo parity for the closure oracles)
-        # event_attribution rotated out mid-r11 for
-        # events_ab_experiment (2x green r9-r10; the attribution family
-        # keeps event_attribution_decay in-window, gains the exactly-
-        # once streaming twin this round, and stays parity-held in-repo)
-        "events_ab_experiment",
-        # doc_semantic_curation rotated out mid-r9 for events_interpolate
-        # (2x green r7+r8; the semantic family keeps doc_semantic_decontam
-        # + doc_cluster_safe_split in-window)
-        # events_interpolate rotated out mid-r11 for
-        # events_grid_hotspots (2x green r9-r10; the timeseries family
-        # keeps events_holt_trend, events_acf, events_gapfill and
-        # events_seasonal_mase in-window)
-        "events_grid_hotspots",
-        # round-7 mid-round: real PPM/BMP/WAV decode enters directly
-        # (find_first_calibration_bypass out; find_first keeps the family)
-        # multimodal_decode (green r7) rotated out in r8 for
-        # multimodal_ulaw — the PPM/BMP/WAV chunk-walk machinery it
-        # verifies is also on the hot path of the five codec queries
-        # staying in-window (png/qoi/audio/video/ulaw) + in-repo parity
-        # doc_subword_mix rotated out in r9 for events_value_quantiles
-        # (2x green r7+r8; the subword family stays via doc_subword_pack
-        # + doc_bpe_tokens)
-        # doc_bpe_tokens rotated out late-r9 for events_geofence (2x
-        # green r7+r8; the subword family stays parity-held in-repo and
-        # the Arrow mapInPandas worker-import path stays externally
-        # exercised every round by the png/qoi/ulaw codec queries)
-        # events_geofence rotated out in r11 mid-round 14 for
-        # orders_benford (2x green r9-r10; the spatial family keeps
-        # events_grid_hotspots in-window and geofence stays a bench
-        # headliner + streaming-twin-tested + parity-held every CI)
-        "orders_benford",
-        # multimodal_video_frames rotated out mid-r9 for
-        # doc_phrase_search (2x green r7+r8; the multimodal family keeps
-        # png/qoi/ulaw/audio_frames — four codec reps — in-window)
-        # multimodal_audio_frames rotated out late-r9 for
-        # event_funnel_latency (2x green r7+r8; the multimodal family
-        # keeps png/qoi/ulaw — three REAL-codec reps — in-window, and
-        # the WAV chunk walk stays on multimodal_ulaw's hot path)
-        # doc_phrase_search rotated out in r11 mid-round 9 for
-        # events_throttle (2x green r9-r10; the retrieval family keeps
-        # doc_bm25_topk + bm25_index_topk + embedding_mmr_rerank
-        # in-window)
-        # event_funnel_latency rotated out in r11 mid-round 12 for
-        # user_cohort_ltv (2x green r9-r10; the funnel family keeps
-        # conversion_paths + session_funnel + attribution decay/position
-        # + throttle — five in-window reps — and latency stays
-        # parity-held in-repo every CI run)
-        # user_cohort_ltv and events_throttle rotated out in r14 for
-        # embedding_semantic_dedup + simhash_pairs (both 3x green
-        # r11-r13; the customer family keeps customer_k_anonymity +
-        # user_churn_survival and the burst/gap family keeps
-        # event_session_funnel in-window; both stay parity-held every
-        # CI run)
-        # doc_lm_score rotated out mid-r9 for events_theta_overlap (2x
-        # green r7+r8; LM scoring stays via doc_bigram_score in-window)
-        # doc_subword_pack rotated out mid-r9 for part_abc_classes (2x
-        # green r7+r8; the subword family keeps doc_bpe_tokens in-window
-        # and packing stays parity-held in-repo)
-        # events_theta_overlap rotated out mid-r11 for
-        # customer_lorenz_curve (2x green r9-r10; the sketch family
-        # keeps events_kmv_cube, events_hll_distinct and
-        # events_hll_rolling in-window)
-        # part_abc_classes rotated out in r12 for orders_decile_summary
-        # (3x green r9-r11; the ranking family keeps
-        # orders_value_deciles, customer_lorenz_curve,
-        # customer_rfm_segments AND the new boundary summary in-window)
-        # orders_decile_summary (2x green r12-r13) and
-        # customer_lorenz_curve (3x green r11-r13) rotated out in r14
-        # for cosine_topk + doc_link_triangles; the ranking family
-        # keeps orders_value_deciles and the concentration family
-        # keeps doc_source_lang_simpson in-window
-        # round-8 plan executed early: the last three never-checked
-        # window-eligible entries (outs: multi_join_revenue, asof_lookup,
-        # jaccard_pairs — multi-round green, families retained)
-        # ivf_index_recall_bound rotated out mid-r9 for
-        # embedding_mmr_rerank (2x green r7+r8; the persisted-index
-        # family keeps bm25_index_topk in-window and the ANN family
-        # keeps lsh_topk/ivf_topk/pq_recall_bound/ivf_pq_recall_bound)
-        # certify_probe rotated out late-r9 for events_kmv_cube and
-        # corpus_stats for events_hll_distinct (both 2x green r7+r8;
-        # the interval family keeps events_scd2_enrich's temporal join
-        # in-window plus certify's bench headline + scaling probe, and
-        # the corpus-aggregate family stays parity-held in-repo)
-        # events_hll_distinct rotated out in r11 mid-round 6 for
-        # event_session_funnel (multi-round green; the sketch family
-        # keeps events_kmv_cube + events_hll_rolling in-window)
-        # embedding_mmr_rerank rotated out in r11 mid-round 10 for
-        # events_stickiness (2x green r9-r10; the embedding family
-        # keeps doc_semantic_decontam + ivf_pq_recall_bound in-window)
-        # events_kmv_cube rotated out in r11 mid-round 13 for
-        # events_trend_test (2x green r9-r10; the sketch family keeps
-        # events_hll_rolling in-window and the cube's merge-law
-        # property suite + parity run every CI)
+        "events_ab_experiment", "events_grid_hotspots", "orders_benford",
         "events_trend_test", "event_session_funnel", "events_stickiness",
-        # doc_card_scan rotated out in r9 for doc_cooccurrence (2x green
-        # r7+r8; the PII-precision family stays via doc_gopher_rules'
-        # rule screen and in-repo parity for card-scan/pii-scrub)
-        # round-8 rotation: the last two never-driver-checked registry
-        # entries enter with full replay oracles (outs: doc_pii_scrub,
-        # doc_chunk — 2x green; PII family stays via doc_card_scan,
-        # chunking via doc_pack_sequences)
-        # lsh_topk rotated out mid-r10 for events_ks_drift (2x green
-        # r8+r9; the ANN family keeps ivf_topk, pq_recall_bound and
-        # ivf_pq_recall_bound in-window, and the LSH signature replay
-        # stays parity-held in-repo every CI run)
-        # ivf_topk rotated out in r11 mid-round 8 for
-        # event_attribution_position (3x green r8-r10; the ANN family
-        # keeps ivf_pq_recall_bound's composed check in-window and
-        # ivf_topk stays a bench headliner + probe + in-repo parity)
-        # events_ks_drift rotated out in r12 for doc_df_drift (2x green
-        # r10-r11; the drift-screen family keeps the new vocabulary
-        # screen in-window, the KS screen stays parity-held in-repo
-        # every CI run plus its streaming twin suite)
-        # doc_df_drift (2x green r12-r13) and event_attribution_position
-        # (3x green r11-r13) rotated out in r14 for doc_fuzzy_pairs +
-        # minhash_pairs; the drift family keeps documents_profile_drift
-        # and the journey family keeps event_session_funnel in-window
-        # round-8: real compressed (zlib PNG) decode enters directly
-        # (doc_top_terms out — 2x green; tf-idf stays via corpus_top_ngrams)
-        # multimodal_png rotated out in r11 mid-round 3 for
-        # doc_link_prediction (3x green r8-r10; the codec family keeps
-        # multimodal_qoi's full op mix in-window, PNG stays parity-held
-        # in-repo every CI run)
-        # round-8: second real compressed codec (QOI) enters directly
-        # (doc_global_shuffle out — 2x green; the sampling family stays
-        # via doc_source_quota/doc_importance_resample/cluster_safe_split)
-        # multimodal_qoi rotated out mid-r13 for
-        # events_classification_report (5x green r8-r12, one of the two
-        # longest surviving streaks; the codec family's 7 REAL decoders
-        # — PPM/BMP/WAV/Y4M/PNG/QOI/G.711 — stay parity-held in-repo
-        # every CI run).  The per-class precision/recall/F1 report is
-        # the fixed-threshold leg of the r13 model-eval tier (ROC +
-        # calibration + uplift + classification report + kappa).
-        "events_classification_report",
-        # round-8: semantic eval-overlap screening enters directly
-        # (doc_split_assign out — 2x green; the sampling/split family
-        # stays via doc_global_shuffle, doc_source_quota,
-        # doc_importance_resample, doc_cluster_safe_split)
-        # doc_semantic_decontam rotated out in r13 for
-        # events_calibration_curve (5x green r8-r12 — one of the two
-        # longest surviving streaks; the decontamination family keeps
-        # corpus_ngram_overlap in-window plus the streaming decontam
-        # twin suite + in-repo parity every CI run).  The reliability
-        # diagram + ECE is the second model-eval representative next
-        # to the r13 ROC curve.
-        "events_calibration_curve",
-        # round-8: Gopher-paper quality-rule screen enters directly
-        # (doc_token_stats out — green since r5; family stays via
-        # corpus_stats + doc_quality_quantile)
-        # doc_gopher_rules rotated out in r13 for orders_rollup_report
-        # (5x green r8-r12 — the other longest streak; the quality
-        # family keeps table_expectations + doc_quality_survivors
-        # in-window and the Gopher screen stays parity-held every CI
-        # run).  The ROLLUP report is the grouping-sets surface.
-        "orders_rollup_report",
-        # round-8: product-quantization ADC enters directly
-        # (embedding_near_dup out — many-round green; family stays via
-        # embedding_semantic_dedup + cosine_topk)
-        # pq_recall_bound rotated out in r11 mid-round 3 for
-        # user_churn_survival (3x green r8-r10; the ANN family keeps
-        # ivf_topk's full replay oracle + the composed ivf_pq bound)
-        # round-8: composed IVF-PQ (the FAISS IVFPQ production shape)
-        # enters directly (multimodal_resize out — multi-round green)
-        # ivf_pq_recall_bound rotated out mid-r13 for
-        # events_rater_agreement (5x green r8-r12, the other longest
-        # streak; the ANN family's five recall bounds + full topk
-        # replays stay parity-held in-repo every CI run).  Cohen's
-        # kappa is the labeling-campaign acceptance gate — the planted
-        # worse-than-chance rater exercises the sign-split division.
-        "events_rater_agreement",
-        # round-8: exact-integer iterative PageRank entered directly
-        # (doc_fingerprint out — multi-round green); rotated out in r11
-        # mid-round 11 for events_rank_sum (3x green r8-r10; the graph
-        # family keeps communities/ppr/prediction/kcore in-window and
-        # pagerank stays a bench headliner + shuffle-gated + parity-held)
-        # events_rank_sum rotated out in r14 for doc_bm25_topk (3x green
-        # r11-r13; the rank-test family keeps events_trend_test in-window
-        # and Mann-Whitney stays parity-held every CI run)
-        # round-8: SCD Type-2 dimension history enters directly
-        # (doc_lang_id out — multi-round green)
-# user_scd2_history rotated out in r13 for documents_profile_drift
-        # (5x green r8-r12, the last long streak; the SCD2 machinery
-        # keeps its streaming equivalence suite every CI run plus
-        # in-repo parity, and events_scd2_enrich held external green
-        # r8-r10).  The profile-drift audit is the table-shape sibling
-        # of the KS / DF-drift screens (schema-contract flags +
-        # null-rate / cardinality shifts).
-        "documents_profile_drift",
-        # round-8: event-analytics tier (funnel / retention / Markov)
-        # enters directly (outs: lsh_recall_bound, ivf_recall_bound,
-        # events_rollup_incremental — see inline notes; the rollup family
-        # stays via session_window/event_correlation plus in-repo parity)
-        # event_transition_matrix rotated out mid-r10 for
-        # event_conversion_paths (2x green r8+r9; the journey family
-        # gains the full-sequence census and keeps event_funnel +
-        # event_funnel_latency in-window; the first-order matrix stays
-        # parity-held in-repo every CI run)
-        # user_retention_cohorts rotated out late-r10 for
-        # customer_rfm_segments (2x green r8+r9; the customer-analytics
-        # family gains the RFM tiers and keeps event_funnel +
-        # event_funnel_latency in-window; retention stays parity-held
-        # in-repo every CI run)
-        # event_funnel rotated out in r11 mid-round 4 for
-        # events_diff_in_diff (3x green r8-r10; the funnel family keeps
-        # event_funnel_latency + event_conversion_paths +
-        # event_attribution_decay in-window, gained the exactly-once
-        # streaming twin in r11, and stays parity-held in-repo)
-        # event_conversion_paths rotated out in r12 for
-        # doc_quality_survivors (2x green r10-r11; the journey family
-        # keeps event_session_funnel + both attribution forms in-window,
-        # the path census stays parity-held in-repo every CI run)
-        # customer_rfm_segments rotated out in r13 for
-        # customer_k_anonymity (3x green r10-r12; the ranking family
-        # keeps orders_value_deciles, orders_decile_summary and
-        # customer_lorenz_curve in-window; RFM stays parity-held
-        # in-repo every CI run).  The k-anonymity/l-diversity audit is
-        # the new privacy-tier representative (operators/privacy.py).
-        "customer_k_anonymity", "doc_quality_survivors",
-        # events_diff_in_diff rotated out in r14 for multimodal_decode
-        # (3x green r11-r13; the experiment family keeps events_cuped_ate,
-        # events_post_strat_ate and events_ab_experiment in-window)
-        # round-8: gap-rule batch sessionization enters directly
-        # (doc_decontaminate out — 2x green; the decontamination family
-        # stays via doc_semantic_decontam)
-        # event_sessions rotated out mid-r10 for
-        # events_quantile_normalize (2x green r8+r9; the
-        # sessionization family stays parity-held in-repo and the
-        # journey tier keeps funnel/latency/paths in-window)
-        # events_quantile_normalize rotated out in r14 for multimodal_png
-        # (4x green r10-r13; the calibration family keeps
-        # events_calibration_curve and the quantile family keeps
-        # orders_value_deciles in-window)
-        # round-8: time-series grid resample + LOCF gap-fill enters
-        # directly (cosine_topk out — see the ANN-family note above)
-        # events_gapfill rotated out in r10 for events_hll_rolling (2x green
-        # r8+r9; the gap-fill family keeps events_interpolate in-window)
-        # events_hll_rolling rotated out in r13 for events_kmv_distinct
-        # (3x green r10-r12; the VERDICT r12 audit found kmv_distinct was
-        # one of only two registry entries with ZERO external driver
-        # evidence — swapped out for the rolling form in r8 before its
-        # first green.  The sketch family rep is maintained; the rolling
-        # merge-law form stays parity-held in-repo every CI run)
-        "events_kmv_distinct",
-        # round-8: one-pass per-column data-quality profiler enters
-        # directly (doc_quality_quantile out — see note above)
-        # table_profile rotated out in r10 for lineitem_weighted_quantiles
-        # (2x green r8+r9; the quality family keeps table_expectations
-        # in-window)
-        # lineitem_weighted_quantiles rotated out in r14 for certify_probe
-        # (4x green r10-r13; the quantile family keeps orders_value_deciles
-        # in-window and the weighted form stays parity-held every CI run)
-        # round-8: exact-integer per-group OLS trend enters directly
-        # (doc_line_dedup out — 2x green; the dedup family keeps four
-        # in-window reps and line-dedup keeps its bench headline +
-        # 10x scaling probe as perf evidence)
-        # events_hourly_trend rotated out in r10 for events_holt_trend (2x
-        # green r8+r9; the per-group trend family stays via the Holt
-        # recurrence itself + in-repo parity for the OLS form)
-        # events_holt_trend rotated out in r12 for event_bounce_rate
-        # (2x green r10-r11; the timeseries family keeps events_acf,
-        # events_gapfill, events_seasonal_mase, events_seasonal_profile
-        # and events_trend_test in-window — five reps; Holt stays
-        # parity-held in-repo every CI run)
-        # event_bounce_rate rotated out in r14 for events_geofence (2x
-        # green r12-r13; the session family keeps event_session_funnel
-        # in-window)
-        # round-8: per-user sequence pattern search enters directly
-        # (doc_exact_dedup out — see note above)
-        # event_sequence_match rotated out in r10 for doc_link_ppr (2x green
-        # r8+r9; the event-analytics family keeps event_funnel,
-        # event_funnel_latency and event_conversion_paths in-window —
-        # the transition matrix itself rotated out later in r10, see
-        # the event_conversion_paths note below)
-        "doc_link_ppr",
-        # round-8: exact median/MAD anomaly screen enters directly
-        # (dedup_clusters out — see note above)
-        # events_anomalous_hours rotated out in r10 for
-        # customer_entity_resolution (2x green r8+r9; the robust-stat
-        # family stays via events_hdr_quantiles + table_expectations)
-        "customer_entity_resolution",
-        # round-8: PassJoin edit-distance fuzzy join enters directly
-        # (multimodal_features out — 3x green and the weakest of the SIX
-        # multimodal reps; the five REAL-codec queries stay in-window)
-        # doc_fuzzy_pairs rotated out in r10 for doc_jaccard_join (2x green
-        # r8+r9; the PassJoin machinery it verifies is also the blocking
-        # stage of customer_entity_resolution, now in-window, and the
-        # set-similarity family gains the PPJoin prefix-filter join)
-        # doc_jaccard_join rotated out in r13 for events_roc_curve
-        # (3x green r10-r12; the set-similarity family keeps
-        # customer_entity_resolution (PassJoin blocking) in-window and
-        # the PPJoin prefix filter stays a bench probe + parity-held).
-        # The exact ROC curve is the new model-eval representative.
-        "events_roc_curve",
-        # round-8: OHLC candlestick downsample enters directly
-        # (minhash_pairs out — ~6x green since r2, bench headline + 10x
-        # scaling probe keep its perf evidence; the near-dup family keeps
-        # simhash_pairs, doc_dup_spans, doc_near_dup_curation and
-        # doc_fuzzy_pairs in-window)
-        # events_ohlc rotated out in r10 for events_value_bins (2x green
-        # r8+r9; the downsample family keeps events_interpolate +
-        # events_hdr_quantiles in-window)
-        # events_value_bins rotated out mid-r13 for events_cuped_ate
-        # (3x green r10-r12; the histogram family keeps
-        # lineitem_weighted_quantiles + orders_value_deciles in-window
-        # and the equi-width binning stays parity-held every CI run).
-        # CUPED (Deng/Xu/Kohavi/Walker WSDM'13) is the experiment
-        # family's variance-reduction leg next to DiD and post-strat.
-        "events_cuped_ate",
-        # round-8: degree-ordered triangle counting enters directly
-        # (session_window out — multi-round green since r3;
-        # event_correlation keeps the streaming family in-window and the
-        # whole tier stays equivalence-tested in-repo every CI run)
-        # doc_link_triangles rotated out in r10 for lineitem_corr_matrix (2x
-        # green r8+r9; the graph family keeps doc_link_pagerank,
-        # doc_link_kcore and doc_link_ppr — three in-window reps)
-        "lineitem_corr_matrix",
-        # round-8: KMV cardinality sketch enters directly (simhash_pairs
-        # out — see the near-dup note above); upgraded mid-round to the
-        # rolling-window form — the stronger family representative (it
-        # proves the merge law at fact scale: Spark merges daily
-        # sketches, the oracle sketches the raw trailing union
-        # directly); the distinct form stays parity-held in-repo
-        # events_kmv_rolling rotated out in r10 for event_attribution_decay
-        # (2x green r8+r9; the rolling-sketch family stays via
-        # events_hll_rolling, now in-window, plus events_kmv_cube)
-        # event_attribution_decay rotated out in r12 for
-        # doc_dup_rate_by_source (2x green r10-r11; attribution keeps
-        # event_attribution_position in-window plus the exactly-once
-        # streaming twin; decay stays parity-held in-repo every CI run)
-        # doc_dup_rate_by_source rotated out in r14 for dedup_clusters
-        # (2x green r12-r13; the dup-reporting family keeps
-        # doc_quality_survivors plus the four re-entering dedup reps
-        # in-window)
-        # round-8: fact-to-SCD2 temporal enrichment join enters directly
-        # (embedding_semantic_dedup out — see note above)
-        # events_scd2_enrich rotated out late-r10 for
-        # orders_gini_concentration (2x green r8+r9; the temporal-join
-        # family keeps user_scd2_history in-window and the streaming
-        # SCD2 equivalence suite runs every CI)
-        # orders_gini_concentration rotated out mid-r13 for
-        # events_post_strat_ate (3x green r10-r12; the concentration
-        # family keeps customer_lorenz_curve + doc_source_lang_simpson
-        # in-window).  Post-stratification completes the experiment
-        # family's confounding-corrected leg next to DiD.
-        "events_post_strat_ate",
-        # round-8: grid-blocked spatial distance join enters directly
-        # (find_first out — 7x consecutive driver-green since r1, the
-        # longest streak in the window; J4 evidence continues via the
-        # driver's entry() smoke, which runs find_first and collects its
-        # rows EVERY round, plus the bench headline, the single-shuffle
-        # plan gate and in-repo parity)
-        # events_spatial_pairs rotated out in r11 mid-round 5 for
-        # events_type_hour_independence (3x green r8-r10; the spatial
-        # family keeps events_geofence + events_grid_hotspots in-window
-        # and the pairs join stays a bench headliner + 10x probe)
-        # events_type_hour_independence rotated out in r14 for
-        # doc_link_pagerank (3x green r11-r13; the chi-square family
-        # keeps events_ab_experiment in-window)
-        # round-8: count-min frequency sketch enters directly
-        # (doc_curation_pipeline out — see note above)
-        # events_cm_heavy_hitters rotated out late-r10 for
-        # events_winsorize (2x green r8+r9; the sketch family keeps
-        # events_kmv_cube, events_theta_overlap, events_hll_distinct
-        # and events_hll_rolling — four in-window reps)
-        # events_winsorize rotated out in r12 for doc_collocations (2x
-        # green r10-r11; the percentile-clip family keeps
-        # lineitem_weighted_quantiles + events_quantile_normalize
-        # in-window, winsorize stays parity-held in-repo every CI run)
-        # doc_collocations rotated out in r14 for doc_exact_dedup (2x
-        # green r12-r13; the text-stat family keeps corpus_heaps_law +
-        # corpus_ngram_overlap in-window)
-        # round-8: exact binary-fraction EWMA, radius-bounded KNN join,
-        # and REAL G.711 mu-law decode enter directly (outs: see the
-        # chain_flatten_distributed / event_correlation /
-        # multimodal_decode notes above)
-        # events_ewma rotated out mid-r10 for events_acf (2x green
-        # r8+r9; the exact-window time-series family keeps
-        # events_holt_trend, events_interpolate and the ACF itself
-        # in-window, and ewma keeps its bench-headline evidence)
-        # events_knn rotated out mid-r10 for doc_link_communities (2x
-        # green r8+r9; the spatial family keeps events_spatial_pairs
-        # and events_geofence in-window)
-        # multimodal_ulaw rotated out mid-r10 for order_brand_rules (2x
-        # green r8+r9; the multimodal family keeps png/qoi — two
-        # REAL-codec reps — in-window, and the WAV chunk walk stays
-        # parity-held in-repo every CI run)
-        # events_acf rotated out in r12 for doc_source_lang_simpson (2x
-        # green r10-r11; the timeseries family keeps events_gapfill,
-        # events_seasonal_mase, events_seasonal_profile and
-        # events_trend_test in-window; ACF stays parity-held in-repo)
+        "events_classification_report", "events_calibration_curve",
+        "orders_rollup_report", "events_rater_agreement",
+        "documents_profile_drift", "customer_k_anonymity",
+        "doc_quality_survivors", "events_kmv_distinct", "doc_link_ppr",
+        "customer_entity_resolution", "events_roc_curve",
+        "events_cuped_ate", "lineitem_corr_matrix", "events_post_strat_ate",
         "doc_source_lang_simpson", "doc_link_communities",
-        "order_brand_rules",
-        # round-9: Deequ-class declarative expectation suite and HDR
-        # log-linear histogram quantiles enter directly (outs: see the
-        # doc_pack_sequences / corpus_top_ngrams note above)
-        # events_hdr_quantiles rotated out in r11 mid-round 7 for
-        # events_seasonal_profile (2x green r9-r10; the quantile family
-        # keeps lineitem_weighted_quantiles + events_quantile_normalize
-        # + orders_value_deciles in-window)
-# table_expectations rotated out in r13 for events_uplift_curve
-        # (4x green r9-r12; the data-quality family keeps the NEW
-        # warehouse_fk_orphans audit (same module) + doc_quality_
-        # survivors in-window, and the rule suite stays parity-held
-        # every CI run).  The uplift/Qini curve completes the r13
-        # model-eval tier (ROC + calibration + uplift).
-        "events_uplift_curve", "events_seasonal_profile",
-        # round-9: BM25 retrieval enters directly (see doc_source_quota
-        # note above)
-        # doc_bm25_topk rotated out in r13 for bm25_ndcg_eval (4x green
-        # r9-r12; the VERDICT r12 audit found ndcg_eval was one of only
-        # two registry entries with ZERO external driver evidence —
-        # registered r11, never windowed.  The retrieval family rep is
-        # maintained — the NDCG eval replays the same BM25 scorer plus
-        # the graded-relevance DCG fold; the raw top-k form keeps its
-        # bench-headline + sf1 two-decade perf evidence and stays
-        # parity-held in-repo every CI run)
-        "bm25_ndcg_eval",
-        # round-9: the three r8 entrants deliberately held back at the
-        # end of round 8 enter now (outs: see the doc_card_scan /
-        # ivf_kmeans_recall_bound / doc_subword_mix notes above)
-        # doc_cooccurrence rotated out in r11 for order_item_affinity
-        # (3x green r9-r10 incl. staging; the itemsets family gains the
-        # cosine^2 similarity and keeps order_brand_rules in-window)
-        # events_skyline rotated out in r11 for events_seasonal_mase
-        # (2x green r9-r10; the Pareto/order-stat family keeps
-        # part_abc_classes in-window and the skyline stays parity-held
-        # in-repo every CI run)
-        # events_value_quantiles rotated out in r11 for events_gapfill
-        # (2x green r9-r10; the quantile family keeps
-        # events_hdr_quantiles + lineitem_weighted_quantiles in-window;
-        # gapfill was registered in r9 and held parity-checked until its
-        # scheduled slot — the BASELINE.md r10->r11 staging plan)
-        # events_gapfill rotated out in r13 for warehouse_fk_orphans
-        # (4x green r8-r12 ex r10; the timeseries family keeps
-        # events_seasonal_mase, events_trend_test and
-        # events_seasonal_profile in-window; LOCF gap-fill stays
-        # parity-held in-repo every CI run).  The FK orphan audit is
-        # the new referential-integrity representative.
-        "order_item_affinity",
-        # events_seasonal_mase rotated out in r14 for doc_semantic_decontam
-        # (3x green r11-r13; the timeseries family keeps
-        # events_seasonal_profile + events_trend_test in-window)
-        "warehouse_fk_orphans",
-        # r11 mid-round 3: the Kaplan-Meier survival family and the
-        # graph tier's link-prediction candidate generator enter
-        # directly (pq_recall_bound / multimodal_png out, above)
-        "user_churn_survival", "doc_link_prediction",
-        # ---- r14 rotation (VERDICT r13 item 1): every operator
-        # rewritten in the r13/r14 optimization rounds re-enters (or
-        # enters) the window so CORRECTNESS_r14 hash-checks the touched
-        # hot paths directly — outs and family notes above
-        "doc_bm25_topk", "simhash_pairs", "minhash_pairs",
-        "doc_fuzzy_pairs", "dedup_clusters", "doc_exact_dedup",
-        "doc_link_pagerank", "doc_link_triangles",
-        "embedding_semantic_dedup", "cosine_topk",
-        "doc_semantic_decontam", "events_geofence", "certify_probe",
-        "multimodal_decode", "multimodal_png",
+        "order_brand_rules", "events_uplift_curve",
+        "events_seasonal_profile", "bm25_ndcg_eval", "order_item_affinity",
+        "warehouse_fk_orphans", "user_churn_survival",
+        "doc_link_prediction", "doc_bm25_topk", "simhash_pairs",
+        "minhash_pairs", "doc_fuzzy_pairs", "dedup_clusters",
+        "doc_exact_dedup", "doc_link_pagerank", "doc_link_triangles",
+        "embedding_semantic_dedup", "cosine_topk", "doc_semantic_decontam",
+        "events_geofence", "certify_probe", "multimodal_decode",
+        "multimodal_png",
     }
     assert flagship <= set(names[:50])
     # No exemptions: every window entry is oracle-backed (the multimodal
-    # queries gained md5-replay oracles in round 3 — a stale whitelist here
-    # would let a dropped oracle pass silently).
+    # queries carry md5-replay oracles — a stale whitelist here would let
+    # a dropped oracle pass silently).
     for n in names[:50]:
         assert REGISTRY[n].oracle, f"{n} in driver window without oracle"
 

@@ -407,6 +407,17 @@ def test_catalog_read_skips_roots(spark, tmp_path):
     # every root pruned: empty result, schema intact
     none_df = cat.read(spark, "t", where="ts > 100000")
     assert none_df.count() == 0 and set(none_df.columns) == {"ts", "tag"}
+    # ...and no scan job: the optimizer turns the read into an empty
+    # LocalRelation
+    assert none_df.collect() == [] and none_df.columns == ["ts", "tag"]
+    plan = none_df._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation" and plan.data().isEmpty()
+    # column names match the way the session resolves them
+    # (spark.sql.caseSensitive=false): an upper-case predicate prunes alike
+    assert cat.prune_roots("t", "TS >= 200 AND Ts < 300") == kept
+    got_upper = cat.read(spark, "t", where="TS >= 200 AND Ts < 300").collect()
+    assert sorted(r["ts"] for r in got_upper) == list(range(200, 300))
+    assert cat.prune_roots("t", "TAG = 'b'") == cat.prune_roots("t", "tag = 'b'")
     # BETWEEN lowers to >=/<= and prunes like an explicit range (r8)
     assert len(cat.prune_roots("t", "ts BETWEEN 210 AND 250")) == 1
     assert cat.read(spark, "t", where="ts BETWEEN 210 AND 250").count() == 41

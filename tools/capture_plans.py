@@ -13,7 +13,7 @@ For each query NAME this writes ``plans/<round>/NAME_<tag>.txt`` containing:
   constant that, times the host's per-job scheduling floor, is the
   sf0.1 wall model from BASELINE.md round 13);
 - the wall seconds of that single materialization (NOT a min-of-N —
-  use bench_isolated.py for citable timings).
+  bench.py's min-of-3 is the citable timing).
 
 Usage: python tools/capture_plans.py TAG [QUERY ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
