@@ -18,8 +18,16 @@ commit protocol Iceberg/Delta use, minus compaction — and unlike
 directory-rename publishing it also works on object stores where rename
 is copy+delete.
 
-Appends list multiple directories per table (``spark.read.parquet(*paths)``
-unions them scan-side with no shuffle); ``overwrite`` replaces the list.
+Appends list multiple directories per table (each root is scanned and the
+scans union with no shuffle); ``overwrite`` replaces the list.
+
+The manifest also records each root's schema (``schemas``, keyed by rel:
+the written types, as the table reads the root once ``stage``'s write
+commits).  A table's schema is the rel-order, first-seen fold of its
+roots' schemas, and every read reads each root with it: a read returns
+the written types (a hive partition column included), a column a root
+lacks reads as NULL, an empty root reads as empty, and no
+schema-inference job runs.
 
 Because data directories are immutable (a txn only ever adds new ones) and
 every commit also writes an immutable ``manifest-v{N}.json`` snapshot,
@@ -36,10 +44,12 @@ import os
 import uuid
 from dataclasses import dataclass, field
 from decimal import Decimal
+from functools import reduce
 from pathlib import Path
 
 from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "MANIFEST.json"
 
@@ -79,6 +89,9 @@ class Transaction:
     # per-root bloom filters for declared equality-skipping columns:
     # table -> {col: {"h": hex bitmap, "t": "i"|"s" literal-type kind}}
     bloom_stats: dict[str, dict[str, dict]] = field(default_factory=dict)
+    # the schema the table reads the staged root with:
+    # table -> StructType JSON (commit records it under the root's rel)
+    schemas: dict[str, dict] = field(default_factory=dict)
 
     def stage(
         self,
@@ -98,9 +111,13 @@ class Transaction:
 
         The returned DataFrame has ``df``'s columns and types, read with
         ``df``'s schema, so no schema-inference job runs and an empty write
-        reads as empty.  A hive partition column keeps its written type,
-        whereas ``Catalog.read`` infers partition-column types.  Callers
-        that use the rows again read this instead of caching ``df``.
+        reads as empty.  A hive partition column keeps its written type.
+        The manifest records for the root the schema the table reads it
+        with once this write commits: for an append, the table's columns
+        so far followed by the root's new ones, so a rewrite that moves a
+        root to the end of the list cannot reorder the table's columns.
+        Callers that use the rows again read this instead of caching
+        ``df``.
 
         ``sort_by`` applies a partition-local sort before write (the
         reference's compressibility sorts, exporter.py:90-91 — no extra
@@ -117,43 +134,39 @@ class Transaction:
         """
         rel = f"data/{self.txn_id}/{table}"
         out = self.root / rel
+        spark = df.sparkSession
         schema = df.schema
         if zorder_by and range_by:
             raise ValueError("pass range_by or zorder_by, not both")
-        # Write-time schema gate (appends only; one parquet-footer read):
-        # shared columns must keep their types, and adding/dropping columns
+        cat = Catalog(self.root)
+        # Write-time schema gate (appends only; a manifest lookup): shared
+        # columns must keep their types, and adding/dropping columns
         # requires the explicit ``evolve_schema`` opt-in (Delta mergeSchema
         # semantics — the read side then fills absent columns with NULL).
-        if mode == "append":
-            current = Catalog(self.root).table_schema(df.sparkSession, table)
-            if current is not None:
-                old = {f.name: f.dataType for f in current.fields}
-                new = {f.name: f.dataType for f in df.schema.fields}
-                bad_types = {
-                    n: (str(old[n]), str(new[n]))
-                    for n in old.keys() & new.keys()
-                    if old[n] != new[n]
-                }
-                if bad_types:
-                    raise SchemaMismatch(
-                        f"table {table!r}: append changes column types "
-                        f"{bad_types} — evolution never changes types; "
-                        "cast explicitly or overwrite"
-                    )
-                added, dropped = new.keys() - old.keys(), old.keys() - new.keys()
-                if (added or dropped) and not evolve_schema:
-                    raise SchemaMismatch(
-                        f"table {table!r}: append adds {sorted(added)} / "
-                        f"omits {sorted(dropped)}; pass evolve_schema=True "
-                        "to evolve (absent columns read as NULL)"
-                    )
+        # ``commit`` repeats the type check under its lock.
+        current = cat.table_schema(table) if mode == "append" else None
+        if current is not None:
+            bad_types = _type_changes(current, schema)
+            if bad_types:
+                raise SchemaMismatch(
+                    f"table {table!r}: append changes column types "
+                    f"{bad_types} — evolution never changes types; "
+                    "cast explicitly or overwrite"
+                )
+            old, new = set(current.names), set(schema.names)
+            added, dropped = new - old, old - new
+            if (added or dropped) and not evolve_schema:
+                raise SchemaMismatch(
+                    f"table {table!r}: append adds {sorted(added)} / "
+                    f"omits {sorted(dropped)}; pass evolve_schema=True "
+                    "to evolve (absent columns read as NULL)"
+                )
         # The constraint set current NOW is pinned on the txn; commit()
         # aborts if concurrent DDL changed it before publish.  Validation
         # itself happens on the WRITTEN staging files below — one
         # computation of the input instead of two (a validate-then-write
         # double evaluation would also let a nondeterministic upstream pass
         # the probe yet write violating rows).
-        cat = Catalog(self.root)
         checks = cat.constraints(table)
         self.seen_constraints[table] = checks
         if zorder_by:
@@ -181,6 +194,18 @@ class Transaction:
         if max_records_per_file is not None:
             writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
         writer.parquet(str(out))
+        staged = _read_root(spark, out, schema)
+        zone_cols = cat.zone_map(table)
+        bloom_cols = cat.bloom_map(table)
+        # The CHECK and stats passes read the root with the schema the
+        # table has once this write commits, as every reader will: a
+        # column an evolved append omits reads as NULL, and an overwrite
+        # that drops a constrained column no longer carries it.
+        as_table = (
+            _read_root(spark, out, _fold([current, staged.schema]))
+            if current is not None
+            else staged
+        )
         if checks:
             # CHECK constraints (Delta-style expectations), validated on
             # the staged parquet as written.  SQL CHECK semantics: a NULL
@@ -189,29 +214,12 @@ class Transaction:
             # pass, no per-row Python.  On violation the staged files are
             # deleted and the table is never recorded in the transaction —
             # nothing can publish (staging was invisible throughout).
+            import shutil
+
             from pyspark.sql import functions as F
 
-            staged = df.sparkSession.read.parquet(str(out))
-            # Reader semantics for evolved (narrow) APPENDS only: a column
-            # the staged files omit still reads as NULL through the union
-            # with older files, so evaluate constraints the same way —
-            # fill table columns absent from the staged schema with typed
-            # NULLs instead of blowing up in analysis.  An OVERWRITE that
-            # drops a constrained column gets no such backfill: the
-            # published table would no longer carry the column at all, so
-            # the constraint must fail loudly here, not silently pass on
-            # a phantom NULL.
-            if mode == "append":
-                known = Catalog(self.root).table_schema(df.sparkSession, table)
-                if known is not None:
-                    staged_cols = set(staged.columns)
-                    for fld in known.fields:
-                        if fld.name not in staged_cols:
-                            staged = staged.withColumn(
-                                fld.name, F.lit(None).cast(fld.dataType)
-                            )
             try:
-                agg_row = staged.agg(
+                row = as_table.agg(
                     *[
                         F.sum(
                             F.when(
@@ -225,67 +233,85 @@ class Transaction:
                     ]
                 ).collect()[0]
             except AnalysisException as exc:
-                # A constraint referencing a column the staged data does
-                # not carry (and, for appends, the table schema cannot
-                # backfill) is a real violation of the table contract —
-                # report it as such and never leave staged files behind.
-                # Only ANALYSIS errors convert: a transient runtime
-                # failure (executor loss, IO) must propagate as itself so
-                # the caller retries instead of debugging constraints.
-                import shutil
-
+                # A constraint referencing a column the table will not
+                # carry is a real violation of the table contract — report
+                # it as such and never leave staged files behind.  Only
+                # ANALYSIS errors convert: a transient runtime failure
+                # (executor loss, IO) must propagate as itself so the
+                # caller retries instead of debugging constraints.
                 shutil.rmtree(out, ignore_errors=True)
                 raise ConstraintViolation(
                     f"table {table!r}: CHECK constraints {sorted(checks)} "
                     f"could not be evaluated against the staged data: {exc}"
                 ) from exc
-            row = agg_row
             bad = {c: int(row[c] or 0) for c in row.asDict() if row[c]}
             if bad:
-                import shutil
-
                 shutil.rmtree(out, ignore_errors=True)
                 raise ConstraintViolation(
                     f"table {table!r}: staged data violates CHECK "
                     f"constraints (violating rows per constraint): {bad}; "
                     f"constraints: { {c: checks[c] for c in bad} }"
                 )
-        zone_cols = cat.zone_map(table)
-        bloom_cols = cat.bloom_map(table)
-        # One lazy reader over the staged root shared by the zone and
-        # bloom passes (the CHECK pass above keeps its own: it may
-        # NULL-backfill evolved columns, which must not leak into stats).
-        if zone_cols or bloom_cols:
-            staged = df.sparkSession.read.parquet(str(out))
-            zs = _compute_zone_stats(staged, zone_cols)
-            if zs:
-                self.zone_stats[table] = zs
-            bs = _compute_bloom_stats(staged, bloom_cols)
-            if bs:
-                self.bloom_stats[table] = bs
+        zs = _compute_zone_stats(as_table, zone_cols)
+        if zs:
+            self.zone_stats[table] = zs
+        bs = _compute_bloom_stats(as_table, bloom_cols)
+        if bs:
+            self.bloom_stats[table] = bs
+        self.schemas[table] = as_table.schema.jsonValue()
         self.writes[table] = (mode, rel)
-        staged = df.sparkSession.read.schema(schema).parquet(str(out))
-        if partition_by:  # partition columns read back last: restore the order
-            staged = staged.select(*[staged[f"`{c}`"] for c in schema.names])
         return staged
 
 
+def _read_root(spark: SparkSession, path: Path, schema: StructType) -> DataFrame:
+    """One commit root read with ``schema``: no inference job, a column
+    the root lacks reads as NULL, a hive partition column takes its type
+    from ``schema`` and an empty root reads as empty.  The reader puts
+    partition columns last; the select restores ``schema``'s order."""
+    df = spark.read.schema(schema).parquet(str(path))
+    return df.select(*[df[f"`{n}`"] for n in schema.names])
 
 
-def _align_df(df: DataFrame, pinned: dict) -> DataFrame:
-    """Conform ``df`` to a pinned column->dtype map: absent columns
-    become typed NULLs, type-mismatched columns cast.  The one
-    alignment rule shared by the MOR delete-applied read and the
-    root-scoped rewrite paths (they must agree or the same table reads
-    with different types depending on the path)."""
-    from pyspark.sql import functions as F
+def _fold(schemas) -> StructType:
+    """First-seen fold: every column of ``schemas``, in order of first
+    appearance, with the type it first appears with."""
+    fields: dict = {}
+    for s in schemas:
+        for f in s.fields:
+            fields.setdefault(f.name, f)
+    return StructType(list(fields.values()))
 
-    for name, dtype in pinned.items():
-        if name not in df.columns:
-            df = df.withColumn(name, F.lit(None).cast(dtype))
-        elif df.schema[name].dataType != dtype:
-            df = df.withColumn(name, F.col(name).cast(dtype))
-    return df
+
+def _table_schema_m(m: dict, table: str) -> StructType:
+    """``table``'s schema in the manifest snapshot ``m``: the rel-order,
+    first-seen fold of its roots' recorded schemas."""
+    recorded = m["schemas"][table]
+    return _fold(StructType.fromJson(recorded[r]) for r in m["tables"][table])
+
+
+# the manifest's per-root bags: table -> rel -> entry
+_ROOT_BAGS = ("zones", "blooms", "schemas")
+
+
+def _root_entries(m: dict, table: str, rels: list[str]) -> dict:
+    """``table``'s per-root entries in ``m`` for ``rels`` (rel -> bag ->
+    entry), the form ``commit``'s ``stats_patch`` grafts."""
+    return {
+        r: {
+            bag: m[bag][table][r]
+            for bag in _ROOT_BAGS
+            if r in m.get(bag, {}).get(table, {})
+        }
+        for r in rels
+    }
+
+
+def _type_changes(old: StructType, new: StructType) -> dict:
+    """Shared columns whose type differs, nullability aside (the Parquet
+    reader returns every column nullable)."""
+    was = {f.name: f.dataType.simpleString() for f in old.fields}
+    now = {f.name: f.dataType.simpleString() for f in new.fields}
+    return {n: (was[n], now[n]) for n in was.keys() & now.keys() if was[n] != now[n]}
 
 
 def _compute_zone_stats(staged: DataFrame, zone_cols: list[str]) -> dict:
@@ -294,13 +320,13 @@ def _compute_zone_stats(staged: DataFrame, zone_cols: list[str]) -> dict:
     pass shape as the CHECK scan).  The range stats ignore NULLs, which
     keeps range pruning sound: a NULL row can never satisfy a
     <,<=,>,>=,= predicate, so a root whose non-null range excludes the
-    predicate truly has no matches.  The NULL counts (r13) are the
+    predicate truly has no matches.  The NULL counts are the
     ``IS NULL`` / ``IS NOT NULL`` complement: a root with zero NULLs
     has no ``IS NULL`` matches, an all-NULL root no ``IS NOT NULL``
-    matches — so all-NULL and non-serializable-range columns now record
-    ``[None, None, n_nulls, n_rows]`` instead of being skipped (the
-    all-NULL root is exactly the best IS-NOT-NULL prune candidate).
-    Legacy 2-element entries (pre-r13 manifests) stay readable: the
+    matches — so all-NULL and non-serializable-range columns record
+    ``[None, None, n_nulls, n_rows]`` (the all-NULL root is exactly the
+    best IS-NOT-NULL prune candidate).  Legacy 2-element entries
+    (manifests written before the NULL counts) stay readable: the
     pruner treats a missing count pair as unknown and never prunes on
     it.  Shared by ``Transaction.stage`` and ``Catalog.backfill_stats``.
     """
@@ -736,6 +762,7 @@ class Catalog:
             return 0
         zones = m.get("zones", {}).get(table, {})
         blooms = m.get("blooms", {}).get(table, {})
+        schema = _table_schema_m(m, table)
         patch: dict[str, dict] = {}
         for rel in m["tables"][table]:
             # per-COLUMN granularity: a later set_zone_map/set_bloom_filter
@@ -743,8 +770,8 @@ class Catalog:
             # declaration still needs the new columns — "root present in
             # the bag" is not "root covered"
             need_z = bool(zone_cols) and any(
-                # missing column, or a legacy pre-r13 [min,max] entry
-                # without the NULL counts — backfill upgrades both
+                # missing column, or a legacy [min,max] entry without
+                # the NULL counts — backfill upgrades both
                 len(zones.get(rel, {}).get(c) or []) < 4
                 for c in zone_cols
             )
@@ -753,16 +780,12 @@ class Catalog:
             )
             if not (need_z or need_b):
                 continue
-            p = self.root / rel
-            if not any(p.rglob("*.parquet")):
-                continue  # empty root (idempotent re-import): nothing to stat
-            df = spark.read.parquet(str(p))
+            df = _read_root(spark, self.root / rel, schema)
             entry: dict[str, dict] = {}
             if need_z:
                 zs = _compute_zone_stats(df, zone_cols)
-                # unchanged result (e.g. the missing column is all-NULL or
-                # absent from this root's schema) -> no patch, so repeat
-                # calls converge to 0 instead of re-committing forever
+                # unchanged result -> no patch, so repeat calls converge
+                # to 0 instead of re-committing forever
                 if zs and zs != zones.get(rel):
                     entry["zones"] = zs
             if need_b:
@@ -806,29 +829,72 @@ class Catalog:
         """Read a table as of the latest commit, or a historical snapshot
         (``version`` from ``history()`` — time travel).
 
+        Every root is read with the table's recorded schema: the result
+        has the written column types, a column a root lacks reads as
+        NULL, and no schema-inference job runs before the action.
+
         ``where`` applies a SQL predicate AND, when the table has
         declared zone-map or Bloom columns, skips whole commit roots on
         which Spark's parse of the predicate provably matches no row
         (``prune_roots``); a predicate it cannot reason about scans every
         root — always sound, because the filter is applied in full
-        either way."""
+        either way.  A pruned read keeps every column of the table; with
+        every root pruned it is an empty relation of the table's schema."""
         m = self.manifest(version)
         if table not in m["tables"]:
             raise KeyError(f"catalog {self.root}: no table {table!r}")
-        rels = m["tables"][table]
         if where is None:
-            return self._read_rels_with_deletes(spark, m, table, rels)
+            return self.read_snapshot(spark, m, table)
         kept = self.prune_roots(table, where, version=version)
-        if kept:
-            return self._read_rels_with_deletes(spark, m, table, kept).filter(where)
-        # Every root pruned: the first root still gives the schema and
-        # resolves ``where``; the zero limit becomes an empty relation in
-        # the optimizer, so no scan job runs.
-        return (
-            self._read_rels_with_deletes(spark, m, table, rels[:1])
-            .filter(where)
-            .limit(0)
-        )
+        return self.read_snapshot(spark, m, table, kept).filter(where)
+
+    def read_snapshot(
+        self,
+        spark: SparkSession,
+        m: dict,
+        table: str,
+        rels: list[str] | None = None,
+    ) -> DataFrame:
+        """``table`` as of the manifest snapshot ``m`` that the caller
+        holds (e.g. to commit against it with ``require_roots``), or only
+        its roots ``rels``: each root read with the snapshot's table
+        schema, pending merge-on-read deletes applied."""
+        if rels is None:
+            rels = m["tables"][table]
+        return self._read_rels(spark, m, table, rels, _table_schema_m(m, table))
+
+    def _read_rels(
+        self,
+        spark: SparkSession,
+        m: dict,
+        table: str,
+        rels: list[str],
+        schema: StructType,
+    ) -> DataFrame:
+        """Read commit roots with ``schema`` and the snapshot ``m``'s
+        pending merge-on-read deletes applied — each delete predicate
+        filters ONLY the roots it was scoped to (appends after the delete
+        are untouched), with DELETE's three-valued semantics (NULL
+        predicate keeps the row).  Every root reads with the same schema,
+        so a predicate naming a column a root lacks sees NULL there and
+        the union needs no alignment.  No roots: an empty relation of
+        ``schema`` (the zero limit lets the optimizer see it is empty, so
+        no job runs)."""
+        from pyspark.sql import functions as F
+
+        if not rels:
+            return spark.createDataFrame([], schema).limit(0)
+        entries = m.get("deletes", {}).get(table, [])
+        parts = []
+        for rel in rels:
+            df = _read_root(spark, self.root / rel, schema)
+            for e in entries:
+                if rel in e.get("roots", []):
+                    df = df.filter(
+                        ~F.coalesce(F.expr(e["p"]).cast("boolean"), F.lit(False))
+                    )
+            parts.append(df)
+        return reduce(DataFrame.union, parts)
 
     def pending_deletes(
         self, table: str, *, version: int | None = None
@@ -840,73 +906,6 @@ class Catalog:
             dict(e)
             for e in self.manifest(version).get("deletes", {}).get(table, [])
         ]
-
-    def _read_rels_with_deletes(
-        self, spark: SparkSession, m: dict, table: str, rels: list[str]
-    ) -> DataFrame:
-        """Read commit roots with the manifest's pending merge-on-read
-        deletes applied — each delete predicate filters ONLY the roots it
-        was scoped to (appends after the delete are untouched), with
-        DELETE's three-valued semantics (NULL predicate keeps the row)."""
-        from pyspark.sql import functions as F
-
-        entries = m.get("deletes", {}).get(table, [])
-        if not entries:
-            return self._read_roots(spark, rels)
-        groups: dict[tuple, list[str]] = {}
-        for r in rels:
-            preds = tuple(e["p"] for e in entries if r in e.get("roots", []))
-            groups.setdefault(preds, []).append(r)
-        # Align schemas ACROSS groups BEFORE filtering (mirroring
-        # _read_roots' first-seen type pinning, in rel order): a predicate
-        # referencing a schema-evolved column must see it as a typed NULL
-        # in pre-evolution groups (NULL predicate keeps the row — the same
-        # semantics the copy-on-write delete gets from the pinned union),
-        # not blow up with an unresolved column.
-        raw = [(preds, self._read_roots(spark, rs)) for preds, rs in groups.items()]
-        # Pin column types from the plain rel-order read of ALL rels, not
-        # first-seen across predicate GROUPS (ADVICE r9): delete scoping
-        # can interleave roots into groups in a different order than the
-        # manifest, and a schema-evolved column would then pin a
-        # different dtype here than the _read_roots path over the same
-        # rels — the same table must read with the same types before and
-        # after a MOR delete.  Schema-only: no data is scanned.
-        pinned = self._pin_types(spark, rels)
-        parts = []
-        for preds, df in raw:
-            df = _align_df(df, pinned)
-            for p in preds:
-                df = df.filter(
-                    ~F.coalesce(F.expr(p).cast("boolean"), F.lit(False))
-                )
-            parts.append(df)
-        out = parts[0]
-        for part in parts[1:]:
-            out = out.unionByName(part)
-        return out
-
-    def _align_to_table_types(
-        self, spark: SparkSession, df: DataFrame, rels: list[str]
-    ) -> DataFrame:
-        """Align ``df`` to the FULL rel-order read of ``rels``: cast
-        name-matched columns to the pinned types (hive partition-value
-        inference can pin a root subset differently — all-numeric values
-        infer int in one root, string across the table) and add columns
-        the subset lacks as typed NULLs (a schema-evolved column may
-        live only in other roots; the full-table union reads it as NULL
-        here, and a rewrite predicate referencing it must resolve, with
-        NULL's three-valued semantics, not blow up).  Schema-only:
-        footer reads, no data scan."""
-        return _align_df(df, self._pin_types(spark, rels))
-
-    def _pin_types(self, spark: SparkSession, rels: list[str]) -> dict:
-        """Column -> dtype as the plain rel-order read of ``rels`` pins
-        them (schema-only).  THE one source of type truth for every
-        alignment site — MOR reads and root-scoped rewrites share it."""
-        return {
-            f.name: f.dataType
-            for f in self._read_roots(spark, rels).schema.fields
-        }
 
     def prune_roots(
         self, table: str, where: str, *, version: int | None = None
@@ -946,59 +945,11 @@ class Catalog:
             if not _excludes(tree, stats(zones, r), stats(blooms, r))
         ]
 
-    def table_schema(self, spark: SparkSession, table: str):
-        """The table's current read schema (None if the table doesn't
-        exist or holds no data files yet).  One parquet-footer read per
-        root at most — cheap enough for per-append write-time gating."""
-        rels = self.manifest()["tables"].get(table)
-        if not rels:
-            return None
-        for rel in rels:
-            p = self.root / rel
-            if any(p.rglob("*.parquet")):
-                return self._read_roots(spark, rels).schema
-        return None
-
-    def _read_roots(self, spark: SparkSession, rels: list[str]) -> DataFrame:
-        """Read a fixed list of commit roots (a snapshot of a table's
-        manifest entry) and union them."""
-        paths = [str(self.root / rel) for rel in rels]
-        if len(paths) == 1:
-            return spark.read.parquet(paths[0])
-        # Multi-commit (append) tables: each commit's files live under its
-        # own txn root, so a single multi-path read of hive-partitioned
-        # data fails partition discovery (CONFLICTING_DIRECTORY_STRUCTURES
-        # — no common basePath exists across txn dirs).  Read each commit
-        # root independently and union by name; partition columns are
-        # recovered per-root.  Roots with no data files (an idempotent
-        # re-import stages an empty write: _SUCCESS only) carry no rows
-        # and no schema — skip them.  (Local-FS listing; on an object
-        # store swap for the Hadoop FileSystem API.)
-        with_data = [p for p in paths if any(Path(p).rglob("*.parquet"))]
-        if not with_data:  # all-empty: defer to the reader's own error
-            return spark.read.parquet(paths[0])
-        # Per-root inference can diverge — hive partition-column type
-        # inference (an all-numeric partition value infers int in one
-        # commit, string in another) or opted-in schema evolution across
-        # appends.  Pin every later root's name-matched columns to the
-        # FIRST type seen (new columns pin at first appearance), and union
-        # with allowMissingColumns so evolved tables read absent columns
-        # as NULL.  Column-set mistakes cannot arrive silently here: the
-        # write-time gate (Transaction.stage SchemaMismatch) rejects them
-        # unless the caller explicitly evolved the schema.
-        from pyspark.sql import functions as F
-
-        out = spark.read.parquet(with_data[0])
-        pinned = {f.name: f.dataType for f in out.schema.fields}
-        for p in with_data[1:]:
-            df = spark.read.parquet(p)
-            for name, dtype in pinned.items():
-                if name in df.columns and df.schema[name].dataType != dtype:
-                    df = df.withColumn(name, F.col(name).cast(dtype))
-            for f in df.schema.fields:
-                pinned.setdefault(f.name, f.dataType)
-            out = out.unionByName(df, allowMissingColumns=True)
-        return out
+    def table_schema(self, table: str) -> StructType | None:
+        """The table's current schema (None if the table doesn't exist),
+        from the manifest alone — no data file is opened."""
+        m = self.manifest()
+        return _table_schema_m(m, table) if table in m["tables"] else None
 
     def exists(self, table: str) -> bool:
         return table in self.manifest()["tables"]
@@ -1060,7 +1011,7 @@ class Catalog:
             # merge-on-read deletes materialize here: the rewrite reads
             # the DELETE-APPLIED state and the overwrite commit clears
             # the entries (require_deletes catches a racing MOR delete).
-            df = self._read_rels_with_deletes(spark, snapshot, table, roots)
+            df = self.read_snapshot(spark, snapshot, table)
             txn = self.begin()
             txn.stage(
                 table,
@@ -1148,9 +1099,7 @@ class Catalog:
             roots = list(snapshot["tables"].get(table, []))
             pending = snapshot.get("deletes", {}).get(table, [])
             if roots:
-                current = self._read_rels_with_deletes(
-                    spark, snapshot, table, roots
-                )
+                current = self.read_snapshot(spark, snapshot, table)
                 keys = updates.select(*key_cols).distinct()
                 merged = current.join(keys, on=key_cols, how="left_anti").unionByName(
                     updates.select(*current.columns)
@@ -1205,7 +1154,7 @@ class Catalog:
         versions; ``diff`` shows the deletion as removed rows (GDPR-style
         erasure therefore also needs ``vacuum`` to reclaim old snapshots).
 
-        Scale (r10, root-scoped): the rewrite touches ONLY the commit
+        Scale (root-scoped): the rewrite touches ONLY the commit
         roots the predicate can match — the manifest's zone-map/Bloom
         stats prune the rest, which ride into the new version by
         reference (the RESTORE/CLONE zero-copy mechanism), so a one-row
@@ -1240,24 +1189,19 @@ class Catalog:
                 # records the (0-row) DELETE without reading anything
                 txn = self.begin()
             else:
-                remaining = self._read_rels_with_deletes(
+                # the touched roots read with the table schema, so the
+                # predicate resolves even on a column they lack
+                remaining = self.read_snapshot(
                     spark, snapshot, table, touched
-                )
-                if scoped:
-                    # align BEFORE the filter: the predicate may reference
-                    # an evolved column the touched subset lacks
-                    remaining = self._align_to_table_types(
-                        spark, remaining, roots
-                    )
-                remaining = remaining.filter(keep)
+                ).filter(keep)
                 txn = self.begin()
                 txn.stage(
                     table,
                     remaining,
                     # scoped: the staged root REPLACES the touched roots
                     # (commit's replace_roots drops them); evolve_schema
-                    # because the touched subset may carry only a subset
-                    # of an evolved table's columns
+                    # because the carried roots may lack columns the
+                    # rewrite (read with the table schema) carries
                     mode="append" if scoped else "overwrite",
                     sort_by=sort_by,
                     partition_by=partition_by,
@@ -1358,8 +1302,10 @@ class Catalog:
         scans only the surviving roots.
 
         Views resolve lazily through the SAME reader (multi-root union,
-        pinned schema), so predicate pushdown, partition pruning, and
-        column pruning all apply to SQL exactly as to the DataFrame API."""
+        each root read with the manifest's recorded table schema, so a view
+        has the written column types), so predicate pushdown, partition
+        pruning, and column pruning all apply to SQL exactly as to the
+        DataFrame API."""
         out: dict[str, str] = {}
         taken: dict[str, str] = {}
         for t in sorted(self.manifest(version)["tables"]):
@@ -1411,6 +1357,7 @@ class Catalog:
             meta={"restored": table, "to_version": version, **(meta or {})},
             root_overrides={table: self._existing_roots(table, roots)},
             deletes_ddl={table: [dict(e) for e in restored_deletes]},
+            stats_patch={table: _root_entries(m_v, table, roots)},
         )
 
     def clone(
@@ -1447,6 +1394,7 @@ class Catalog:
             root_overrides={dst: self._existing_roots(src, roots)},
             require_absent=[dst],
             deletes_ddl={dst: [dict(e) for e in src_deletes]},
+            stats_patch={dst: _root_entries(m, src, roots)},
         )
 
     def update(
@@ -1474,7 +1422,7 @@ class Catalog:
         back to the column's existing type so an UPDATE cannot silently
         change the table schema.
 
-        Scale (r10, root-scoped): like :meth:`delete`, only the roots
+        Scale (root-scoped): like :meth:`delete`, only the roots
         the predicate can match (zone-map/Bloom pruning) are rewritten;
         untouched roots carry into the new version by reference — a
         one-row UPDATE on a 100 TB table rewrites one root.  Roots the
@@ -1505,8 +1453,7 @@ class Catalog:
                 # validate assignments against the table schema even when
                 # nothing can match — a typo'd column must not silently
                 # "succeed" as a no-op
-                current = self.table_schema(spark, table)
-                cols = {f.name for f in current.fields} if current else set()
+                cols = _table_schema_m(snapshot, table).names
                 missing = [c for c in assignments if c not in cols]
                 if missing:
                     raise ValueError(
@@ -1514,11 +1461,7 @@ class Catalog:
                     )
                 txn = self.begin()
             else:
-                df = self._read_rels_with_deletes(
-                    spark, snapshot, table, touched
-                )
-                if scoped:
-                    df = self._align_to_table_types(spark, df, roots)
+                df = self.read_snapshot(spark, snapshot, table, touched)
                 missing = [c for c in assignments if c not in df.columns]
                 if missing:
                     raise ValueError(
@@ -1610,15 +1553,19 @@ class Catalog:
         only_from += changed_shared
         only_to += changed_shared
 
-        def read_or_empty(
-            m: dict, rels: list[str], other: list[str]
-        ) -> DataFrame:
-            if rels:
-                return self._read_rels_with_deletes(spark, m, table, rels)
-            return self._read_roots(spark, other).limit(0)
-
-        old = read_or_empty(m_from, only_from, only_to)
-        new = read_or_empty(m_to, only_to, only_from)
+        # both sides read with one schema, the fold of both versions' roots
+        # (the later version's columns first), so they compare column by
+        # column even across schema evolution; an empty side is an empty
+        # relation of that schema
+        recorded = {
+            **m_from.get("schemas", {}).get(table, {}),
+            **m_to.get("schemas", {}).get(table, {}),
+        }
+        schema = _fold(
+            StructType.fromJson(recorded[r]) for r in roots_to + roots_from
+        )
+        old = self._read_rels(spark, m_from, table, only_from, schema)
+        new = self._read_rels(spark, m_to, table, only_to, schema)
         from pyspark.sql import functions as F
 
         return new.exceptAll(old).withColumn(
@@ -1786,6 +1733,20 @@ class Catalog:
                             f"table {tname!r}: merge-on-read deletes "
                             f"changed since snapshot"
                         )
+            for tname, (mode, _) in txn.writes.items():
+                # type conflict check: stage() gated an append against the
+                # table schema current THEN; a concurrent append may have
+                # since given a new column another type
+                if mode == "append" and tname in tables:
+                    clash = _type_changes(
+                        _table_schema_m(m, tname),
+                        StructType.fromJson(txn.schemas[tname]),
+                    )
+                    if clash:
+                        raise CommitConflict(
+                            f"table {tname!r}: column types changed since "
+                            f"stage {clash}; re-stage against the new schema"
+                        )
             if require_absent:
                 # creation conflict check (clone): the pre-lock existence
                 # probe can race another creator — re-check under the lock
@@ -1853,6 +1814,9 @@ class Catalog:
                     tables[table] = tables[table] + [rel]
                 else:
                     raise ValueError(f"unknown write mode {mode!r}")
+                m.setdefault("schemas", {}).setdefault(table, {})[
+                    rel
+                ] = txn.schemas[table]
                 if table in txn.zone_stats:
                     m.setdefault("zones", {}).setdefault(table, {})[
                         rel
@@ -1881,30 +1845,7 @@ class Catalog:
                             "append holding the rewritten rows"
                         )
                     repl = set(replaced)
-                    # The append above put the replacement root at the END
-                    # of the list.  Re-seat it at the slot of the FIRST
-                    # replaced root: _read_roots pins hive-inferred
-                    # partition-column dtypes from the first root it sees,
-                    # so leaving the replacement last would let a scoped
-                    # rewrite of the first root flip the table's read
-                    # dtype across an UPDATE/DELETE version (ADVICE r10 —
-                    # the same instability _pin_types closed for the
-                    # delete-applied path).
-                    new_rel = txn.writes[tname][1]
-                    reseated: list[str] = []
-                    placed = False
-                    for r in tables[tname]:
-                        if r == new_rel:
-                            continue  # drop the appended copy; re-seat below
-                        if r in repl:
-                            if not placed:
-                                reseated.append(new_rel)
-                                placed = True
-                            continue
-                        reseated.append(r)
-                    if not placed:
-                        reseated.append(new_rel)
-                    tables[tname] = reseated
+                    tables[tname] = [r for r in tables[tname] if r not in repl]
                     dbag = m.get("deletes", {})
                     if tname in dbag:
                         kept = []
@@ -1936,45 +1877,29 @@ class Catalog:
                             "in one commit"
                         )
                     tables[table] = list(rels)
-                    # Re-pointed roots (restore/clone) keep their zone and
-                    # bloom stats: rels are txn-unique, so a rel -> stats
-                    # lookup across every table's bag is unambiguous.
-                    for bag_name in ("zones", "blooms"):
-                        by_rel = {
-                            r: st
-                            for tbag in m.get(bag_name, {}).values()
-                            for r, st in tbag.items()
-                        }
-                        carried = {
-                            r: by_rel[r] for r in rels if r in by_rel
-                        }
-                        if carried:
-                            m.setdefault(bag_name, {})[table] = carried
             if stats_patch:
-                # backfill_stats: manifest-only stat grafts for existing
-                # roots.  A root replaced since the stats were computed is
-                # skipped silently — the cleanup below would drop it
-                # anyway, and the caller can re-run.
+                # Manifest-only grafts of per-root entries onto live roots:
+                # backfill_stats' zone/bloom stats, and the entries (stats
+                # and schema) restore/clone carry from the version they
+                # re-point at.  A root replaced since the entries were
+                # read is skipped silently — the cleanup below would drop
+                # it anyway, and the caller can re-run.
                 for tname, per_rel in stats_patch.items():
                     live = set(tables.get(tname, []))
                     for rel, entry in per_rel.items():
                         if rel not in live:
                             continue
-                        if "zones" in entry:
-                            m.setdefault("zones", {}).setdefault(tname, {})[
+                        for bag_name, st in entry.items():
+                            m.setdefault(bag_name, {}).setdefault(tname, {})[
                                 rel
-                            ] = entry["zones"]
-                        if "blooms" in entry:
-                            m.setdefault("blooms", {}).setdefault(tname, {})[
-                                rel
-                            ] = entry["blooms"]
-            for bag_name in ("zones", "blooms"):
+                            ] = st
+            for bag_name in _ROOT_BAGS:
                 if bag_name not in m:
                     continue
-                # Drop stats for roots no longer referenced by the LIVE
+                # Drop entries for roots no longer referenced by the LIVE
                 # table lists (overwrite/compact/delete replaced them).
                 # Snapshot manifests keep their own version-consistent
-                # stats, so time travel still prunes correctly.
+                # entries, so time travel still prunes and reads correctly.
                 for tname in list(m[bag_name]):
                     live = set(tables.get(tname, []))
                     tbag = {

@@ -75,7 +75,7 @@ def stream_ks_drift(
             snapshot = cat.manifest()
             census_roots = list(snapshot["tables"].get(census_table, []))
             merged = (
-                cat._read_roots(spark, census_roots)
+                cat.read_snapshot(spark, snapshot, census_table)
                 .unionByName(b_census)
                 .groupBy("bin")
                 .agg(F.sum("n_cur").cast("bigint").alias("n_cur"))

@@ -144,7 +144,7 @@ def stream_keyed_rebuild(
                 else F.lit(None).cast("int"),
             )
             if obs_roots:
-                log = cat._read_roots(spark, obs_roots)
+                log = cat.read_snapshot(spark, snapshot, obs_table)
                 if nb is not None and bucket_col in log.columns:
                     touched_kbs = [
                         r[0]
@@ -166,7 +166,7 @@ def stream_keyed_rebuild(
                 events = batch
             rebuilt = rebuild(events)
             if silver_roots:
-                current = cat._read_roots(spark, silver_roots)
+                current = cat.read_snapshot(spark, snapshot, table)
                 merged = current.join(
                     touched.select(F.col(key_col).alias(okey)),
                     okey,

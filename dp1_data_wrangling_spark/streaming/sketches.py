@@ -145,7 +145,7 @@ def stream_sketches(
             cm_roots = list(snapshot["tables"].get(cm_table, []))
             new_kmv = (
                 kmv_merge(
-                    [cat._read_roots(spark, kmv_roots), b_kmv],
+                    [cat.read_snapshot(spark, snapshot, kmv_table), b_kmv],
                     group_cols=groups, k=k,
                 )
                 if kmv_roots
@@ -153,7 +153,7 @@ def stream_sketches(
             )
             new_cm = (
                 cm_merge(
-                    [cat._read_roots(spark, cm_roots), b_cm],
+                    [cat.read_snapshot(spark, snapshot, cm_table), b_cm],
                     group_cols=groups,
                 )
                 if cm_roots
@@ -166,7 +166,7 @@ def stream_sketches(
                 )
                 new_sample = (
                     sample_merge(
-                        [cat._read_roots(spark, sample_roots), b_sample],
+                        [cat.read_snapshot(spark, snapshot, sample_table), b_sample],
                         id_col=sample_id_col, group_cols=groups, k=k,
                     )
                     if sample_roots
@@ -177,7 +177,7 @@ def stream_sketches(
                 hdr_roots = list(snapshot["tables"].get(hdr_table, []))
                 new_hdr = (
                     hdr_merge(
-                        [cat._read_roots(spark, hdr_roots), b_hdr],
+                        [cat.read_snapshot(spark, snapshot, hdr_table), b_hdr],
                         group_cols=groups,
                     )
                     if hdr_roots
@@ -188,7 +188,7 @@ def stream_sketches(
                 hll_roots = list(snapshot["tables"].get(hll_table, []))
                 new_hll = (
                     hll_merge(
-                        [cat._read_roots(spark, hll_roots), b_hll],
+                        [cat.read_snapshot(spark, snapshot, hll_table), b_hll],
                         group_cols=groups,
                     )
                     if hll_roots

@@ -653,9 +653,9 @@ def test_backfill_stats_makes_predeclaration_roots_prunable(spark, tmp_path):
 
 
 def test_catalog_zone_maps_respect_time_travel_and_views(spark, tmp_path):
-    """Snapshot manifests carry version-consistent zones, and
-    register_views(where=...) registers pre-pruned filtered views for
-    SQL sessions."""
+    """Snapshot manifests carry version-consistent zones, a restore
+    brings the restored roots' zones back, and register_views(where=...)
+    registers pre-pruned filtered views for SQL sessions."""
     from dp1_data_wrangling_spark.plans import Catalog
 
     cat = Catalog(str(tmp_path / "cat"))
@@ -672,6 +672,14 @@ def test_catalog_zone_maps_respect_time_travel_and_views(spark, tmp_path):
     views = cat.register_views(spark, prefix="zm_", where={"t": "ts >= 75"})
     assert views == {"t": "zm_t"}
     assert spark.sql("SELECT count(*) AS n FROM zm_t").collect()[0]["n"] == 25
+    # an overwrite drops the v1 root from the live manifest; restoring to
+    # v1 brings its zone stats back with it
+    tx = cat.begin()
+    tx.stage("t", spark.range(200, 210).select(F.col("id").alias("ts")), mode="overwrite")
+    cat.commit(tx)
+    cat.restore("t", v1)
+    assert cat.prune_roots("t", "ts >= 60") == []
+    assert cat.read(spark, "t", where="ts < 10").count() == 10
 
 
 def test_catalog_vacuum_retention(spark, tmp_path):
@@ -945,11 +953,11 @@ def test_catalog_compact_retries_over_concurrent_append(spark, tmp_path):
         txn.stage("t", spark.range(lo, lo + 100), mode="append")
         cat.commit(txn)
 
-    real_read_roots = cat._read_roots
+    real_read = cat.read_snapshot
     fired = {"n": 0}
 
-    def racy_read_roots(spark_, rels):
-        df = real_read_roots(spark_, rels)
+    def racy_read(*args, **kwargs):
+        df = real_read(*args, **kwargs)
         if fired["n"] == 0:
             fired["n"] += 1
             # concurrent appender commits AFTER compact snapshotted its roots
@@ -959,11 +967,11 @@ def test_catalog_compact_retries_over_concurrent_append(spark, tmp_path):
             other.commit(txn)
         return df
 
-    cat._read_roots = racy_read_roots  # type: ignore[method-assign]
+    cat.read_snapshot = racy_read  # type: ignore[method-assign]
     try:
         cat.compact(spark, "t")
     finally:
-        cat._read_roots = real_read_roots  # type: ignore[method-assign]
+        cat.read_snapshot = real_read  # type: ignore[method-assign]
     assert fired["n"] == 1
     got = {r["id"] for r in cat.read(spark, "t").collect()}
     assert got == set(range(300)), "concurrent append was lost by compaction"
@@ -977,11 +985,12 @@ def _assert_same_table(got, want) -> None:
 
 
 def test_catalog_multi_root_partition_type_pinned(spark, tmp_path):
-    """Per-root hive partition-column type inference can diverge (all-numeric
-    values infer int); multi-root reads pin every root to the first root's
-    types so the union neither fails nor silently changes the column type.
-    ``stage`` returns its staged root with the written types: flat,
-    partitioned (the '7' root keeps ``run`` a string) and empty writes."""
+    """A hive partition column reads with its written type whatever its
+    values: a string ``run`` stays a string across roots whether the
+    all-numeric '7' sits in a later root or in the first, and appending
+    'run_a' after a first root of '7' passes the schema gate.  ``stage``
+    returns its staged root with the written types: flat, partitioned (the
+    '7' root keeps ``run`` a string) and empty writes."""
     from dp1_data_wrangling_spark.plans.catalog import Catalog
 
     cat = Catalog(str(tmp_path / "cat"))
@@ -1001,6 +1010,16 @@ def test_catalog_multi_root_partition_type_pinned(spark, tmp_path):
     df = cat.read(spark, "t")
     assert dict(df.dtypes)["run"] == "string"
     assert {r["run"] for r in df.select("run").distinct().collect()} == {"run_a", "7"}
+    assert df.count() == 10
+    # the all-numeric value in the FIRST root
+    txn = cat.begin()
+    txn.stage("u", second, partition_by=["run"])
+    cat.commit(txn)
+    txn = cat.begin()
+    txn.stage("u", first, mode="append", partition_by=["run"])
+    cat.commit(txn)
+    df = cat.read(spark, "u")
+    assert dict(df.dtypes)["run"] == "string"
     assert df.count() == 10
 
 
@@ -1058,11 +1077,11 @@ def test_catalog_merge_retries_over_concurrent_append(spark, tmp_path):
     txn.stage("t", spark.range(100).withColumn("val", F.lit("old")))
     cat.commit(txn)
 
-    real_read_roots = cat._read_roots
+    real_read = cat.read_snapshot
     fired = {"n": 0}
 
-    def racy_read_roots(spark_, rels):
-        df = real_read_roots(spark_, rels)
+    def racy_read(*args, **kwargs):
+        df = real_read(*args, **kwargs)
         if fired["n"] == 0:
             fired["n"] += 1
             other = cat_mod.Catalog(str(tmp_path / "cat"))
@@ -1075,7 +1094,7 @@ def test_catalog_merge_retries_over_concurrent_append(spark, tmp_path):
             other.commit(t2)
         return df
 
-    cat._read_roots = racy_read_roots  # type: ignore[method-assign]
+    cat.read_snapshot = racy_read  # type: ignore[method-assign]
     try:
         cat.merge(
             spark,
@@ -1084,7 +1103,7 @@ def test_catalog_merge_retries_over_concurrent_append(spark, tmp_path):
             ["id"],
         )
     finally:
-        cat._read_roots = real_read_roots  # type: ignore[method-assign]
+        cat.read_snapshot = real_read  # type: ignore[method-assign]
     assert fired["n"] == 1
     rows = {r.id: r.val for r in cat.read(spark, "t").collect()}
     assert all(rows[i] == "app" for i in range(200, 250)), "append lost"
@@ -1602,11 +1621,11 @@ def test_catalog_delete_retries_over_concurrent_append(spark, tmp_path):
     txn.stage("t", spark.range(10).withColumn("flag", F.col("id") % 2 == 0))
     cat.commit(txn)
 
-    real_read_roots = cat._read_roots
+    real_read = cat.read_snapshot
     fired = {"n": 0}
 
-    def racy_read_roots(spark_, rels):
-        df = real_read_roots(spark_, rels)
+    def racy_read(*args, **kwargs):
+        df = real_read(*args, **kwargs)
         if fired["n"] == 0:
             fired["n"] += 1
             other = cat_mod.Catalog(str(tmp_path / "cat"))
@@ -1619,7 +1638,7 @@ def test_catalog_delete_retries_over_concurrent_append(spark, tmp_path):
             other.commit(t2)
         return df
 
-    cat._read_roots = racy_read_roots
+    cat.read_snapshot = racy_read
     cat.delete(spark, "t", "flag")
     ids = sorted(r["id"] for r in cat.read(spark, "t").collect())
     assert ids == [1, 3, 5, 7, 9, 100, 101, 102, 103, 104]
@@ -1790,6 +1809,87 @@ def test_catalog_append_schema_gate_and_evolution(spark, tmp_path):
     cat.commit(t5)
     got = {r["id"]: (r["name"], r["score"]) for r in cat.read(spark, "t").collect()}
     assert got == {1: ("a", None), 2: ("b", 7), 3: (None, None)}
+
+    # a pruned read keeps the table's columns: root 1 {ts}, root 2 {ts, b},
+    # and the zone map on ts prunes root 2 for ``ts < 5``
+    cat.set_zone_map("z", ["ts"])
+    for df in (
+        spark.range(10).select(F.col("id").alias("ts")),
+        spark.range(10, 20).select(F.col("id").alias("ts"), F.col("id").alias("b")),
+    ):
+        tx = cat.begin()
+        tx.stage("z", df, evolve_schema=True)
+        cat.commit(tx)
+    assert len(cat.prune_roots("z", "ts < 5")) == 1
+    assert cat.read(spark, "z", where="ts < 5").columns == ["ts", "b"]
+    assert cat.read(spark, "z", where="ts < 5 and b is null").count() == 5
+
+    # two appends add the same column with different types: both pass the
+    # stage-time gate, and the later commit conflicts under the lock
+    from dp1_data_wrangling_spark.plans.catalog import CommitConflict
+
+    t6, t7 = cat.begin(), cat.begin()
+    for txn, df in (
+        (t6, spark.createDataFrame([(30, "x")], "ts long, c string")),
+        (t7, spark.createDataFrame([(31, 1)], "ts long, c long")),
+    ):
+        txn.stage("z", df, evolve_schema=True)
+    cat.commit(t6)
+    with pytest.raises(CommitConflict, match="types"):
+        cat.commit(t7)
+    assert dict(cat.read(spark, "z").dtypes)["c"] == "string"
+
+
+def test_catalog_read_and_append_run_no_schema_jobs(spark, tmp_path):
+    """The manifest records every root's schema, so building a read of an
+    8-root table (one root schema-evolved, one hive-partitioned) runs no
+    Spark job before its action, with or without a pruning ``where``, and
+    the 9th append's ``stage`` runs as many jobs as the 1st."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        """(Spark jobs ``fn`` ran, its result), counted in a job group."""
+        group = f"schema-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    cat = Catalog(str(tmp_path / "cat"))
+    cat.set_zone_map("t", ["ts"])
+
+    def append(lo: int, *, with_b: bool = False, partition_by=None) -> int:
+        """Stage and commit one root of 10 rows; the jobs its stage ran."""
+        df = spark.range(lo, lo + 10).select(
+            F.col("id").alias("ts"), (F.col("id") % 3).cast("string").alias("tag")
+        )
+        if with_b:
+            df = df.withColumn("b", F.col("ts") * 2)
+        tx = cat.begin()
+        n, _ = jobs(
+            lambda: tx.stage("t", df, partition_by=partition_by, evolve_schema=True)
+        )
+        cat.commit(tx)
+        return n
+
+    first = append(0)
+    for i in range(1, 8):
+        append(10 * i, with_b=i == 5, partition_by=["tag"] if i == 3 else None)
+    assert len(cat.manifest()["tables"]["t"]) == 8
+    n_read, df = jobs(lambda: cat.read(spark, "t"))
+    assert n_read == 0
+    n_pruned, pruned = jobs(lambda: cat.read(spark, "t", where="ts < 15"))
+    assert n_pruned == 0
+    assert df.columns == ["ts", "tag", "b"]
+    assert df.count() == 80 and df.filter("b is not null").count() == 10
+    assert sorted(r.ts for r in pruned.collect()) == list(range(15))
+    assert append(80) == first
 
 
 def test_catalog_describe_history(spark, tmp_path):
@@ -2112,19 +2212,18 @@ def test_catalog_update_rewrites_only_matching_roots(spark, tmp_path):
 
 
 def test_catalog_scoped_rewrite_preserves_first_seen_type_pin(spark, tmp_path):
-    """ADVICE r10: the root-scoped rewrite must RE-SEAT the replacement
-    root at the slot of the first replaced root, not append it last —
-    otherwise rewriting the FIRST root makes some later root the new
-    first-seen type pin, and a hive-inferred partition column that
-    infers differently there ("a" -> string vs "10" -> int) flips the
-    table's read dtype across an UPDATE/DELETE version."""
+    """A root-scoped rewrite of the FIRST root keeps the table's read
+    dtypes: the string hive partition column ``w`` ("a" in root 1, the
+    all-numeric "10" in root 2) reads as its written ``string`` before
+    and after, with the replaced root gone and the carried root kept; and
+    the table's column order survives such a rewrite."""
     from pyspark.sql.types import StringType
 
     from dp1_data_wrangling_spark.plans import Catalog
 
     cat = Catalog(str(tmp_path / "cat"))
     cat.set_zone_map("t", ["id"])
-    # root 1: hive partition value "a" -> string inference (the pin)
+    # root 1: hive partition value "a"
     tx = cat.begin()
     tx.stage(
         "t",
@@ -2132,7 +2231,7 @@ def test_catalog_scoped_rewrite_preserves_first_seen_type_pin(spark, tmp_path):
         partition_by=["w"],
     )
     cat.commit(tx)
-    # root 2: all-numeric partition value "10" -> would infer int
+    # root 2: all-numeric partition value "10"
     tx = cat.begin()
     tx.stage(
         "t",
@@ -2150,10 +2249,8 @@ def test_catalog_scoped_rewrite_preserves_first_seen_type_pin(spark, tmp_path):
     m = cat.manifest()
     assert m["meta"]["rewritten_roots"] == 1
     rels_after = list(m["tables"]["t"])
-    # the replacement sits in the replaced root's slot; the carried root
-    # keeps its position (and is NOT first, so it cannot re-pin types)
-    assert rels_after[1] == rels_before[1]
-    assert rels_after[0] != rels_before[0]
+    assert rels_before[0] not in rels_after  # the replaced root is gone
+    assert rels_before[1] in rels_after  # the carried root is kept
     t_after = {f.name: f.dataType for f in cat.read(spark, "t").schema.fields}
     assert t_after == t_before, "read dtypes must be stable across a scoped rewrite"
     got = {(r.id, r.w) for r in cat.read(spark, "t").collect()}
@@ -2161,6 +2258,22 @@ def test_catalog_scoped_rewrite_preserves_first_seen_type_pin(spark, tmp_path):
         (i, "10") for i in range(100, 110)
     }
     assert got == want
+
+    # nor its column order: root 2 wrote {b, ts}, and the rewrite of root 1
+    # moves it to the end of the list
+    cat.set_zone_map("o", ["ts"])
+    for df in (
+        spark.range(10).select(F.col("id").alias("ts")),
+        spark.range(10, 20).select(F.col("id").alias("b"), F.col("id").alias("ts")),
+    ):
+        tx = cat.begin()
+        tx.stage("o", df, evolve_schema=True)
+        cat.commit(tx)
+    assert cat.read(spark, "o").columns == ["ts", "b"]
+    cat.delete(spark, "o", "ts = 3")
+    assert cat.manifest()["meta"]["rewritten_roots"] == 1
+    assert cat.read(spark, "o").columns == ["ts", "b"]
+    assert cat.read(spark, "o").count() == 19
 
 
 def test_catalog_scoped_rewrite_respects_mor_scoping(spark, tmp_path):
@@ -2205,23 +2318,19 @@ def test_catalog_scoped_rewrite_respects_mor_scoping(spark, tmp_path):
 
 
 def test_mor_read_pins_types_in_manifest_rel_order(spark, tmp_path):
-    """_read_rels_with_deletes pins column dtypes from the plain
-    rel-order read, never first-seen across predicate GROUPS (ADVICE
-    r9): with a hand-built manifest whose delete entry scopes roots 1
-    and 3 (interleaving root 2 into a different group), a column that
-    first appears in root 2 as int and later in root 3 as long must
-    read as int on BOTH paths — the same table must carry the same
-    types before and after a MOR delete."""
+    """A table reads with the same column types with and without a MOR
+    delete: with a hand-built manifest whose delete entry scopes roots 1
+    and 3 (interleaving root 2 between them), the string hive partition
+    column ``w`` — "a" in root 2, the all-numeric "10" in root 3 — reads
+    as its written ``string`` on BOTH paths."""
     from dp1_data_wrangling_spark.plans.catalog import Catalog
 
     cat = Catalog(tmp_path / "cat")
     txn = cat.begin()
     txn.stage("t", spark.createDataFrame([(1,)], "id long"), mode="overwrite")
     cat.commit(txn)
-    # w is DECLARED string in both appends (the write gate correctly
-    # rejects declared type changes), but it is a hive PARTITION column,
-    # so each root re-infers its type from the directory values at read:
-    # root 2's "a" reads string, root 3's all-numeric "10" reads int.
+    # w is a string hive PARTITION column in both appends; root 3's
+    # directory value "10" is all-numeric
     txn = cat.begin()
     txn.stage(
         "t",
@@ -2242,15 +2351,12 @@ def test_mor_read_pins_types_in_manifest_rel_order(spark, tmp_path):
     m = cat.manifest()
     rels = m["tables"]["t"]
     assert len(rels) == 3
-    plain_types = {
-        f.name: f.dataType for f in cat._read_roots(spark, rels).schema.fields
-    }
-    # interleave: the delete scopes roots 1 and 3 only, so grouping by
-    # predicate tuple splits {r1, r3} from {r2} — the adversarial order
+    plain = cat.read_snapshot(spark, m, "t")
+    # interleave: the delete scopes roots 1 and 3 only
     m2 = {**m, "deletes": {"t": [{"p": "id = -1", "roots": [rels[0], rels[2]]}]}}
-    got = cat._read_rels_with_deletes(spark, m2, "t", rels)
-    got_types = {f.name: f.dataType for f in got.schema.fields}
-    assert got_types == plain_types
+    got = cat.read_snapshot(spark, m2, "t")
+    assert got.dtypes == plain.dtypes
+    assert dict(got.dtypes)["w"] == "string"
     # and the read itself is sound: nothing matches id = -1
     assert {r.id for r in got.collect()} == {1, 2, 3}
 
@@ -2274,7 +2380,9 @@ def test_mor_compact_materializes_and_clears(spark, tmp_path):
     assert cat.pending_deletes("t") == []
     assert {r.id for r in cat.read(spark, "t").collect()} == before == set(range(5))
     # physically gone: the raw root holds only surviving rows
-    raw = cat._read_roots(spark, cat.manifest()["tables"]["t"])
+    raw = spark.read.parquet(
+        *[str(cat.root / rel) for rel in cat.manifest()["tables"]["t"]]
+    )
     assert raw.count() == 5
 
 

@@ -1192,8 +1192,7 @@ def test_stream_scd2_bronze_scan_prunes_to_touched_buckets(spark, tmp_path):
 
     cat = Catalog(cat_root)
     # bronze is bucket-partitioned on disk
-    obs_roots = cat.manifest()["tables"]["user_attr_obs"]
-    log = cat._read_roots(spark, obs_roots)
+    log = cat.read_snapshot(spark, cat.manifest(), "user_attr_obs")
     assert "__scd_kb" in log.columns
     n_buckets_present = log.select("__scd_kb").distinct().count()
     assert n_buckets_present > 1, "fixture must span multiple buckets"
