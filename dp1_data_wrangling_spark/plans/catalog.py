@@ -42,6 +42,9 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable, Iterator
+from concurrent.futures import Future, ThreadPoolExecutor, as_completed
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from decimal import Decimal
 from functools import reduce
@@ -50,6 +53,7 @@ from pathlib import Path
 from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 MANIFEST = "MANIFEST.json"
 
@@ -131,6 +135,10 @@ class Transaction:
         shuffle for often-filtered tables).  ``max_records_per_file``
         bounds file size (the reference's 50k-row write batches, G1) so a
         100 TB table becomes many retry-sized files, not a few monsters.
+
+        Safe to call from several threads at once for distinct tables (see
+        ``stage_concurrently``); two concurrent calls for the same table
+        are not.
         """
         rel = f"data/{self.txn_id}/{table}"
         out = self.root / rel
@@ -261,6 +269,39 @@ class Transaction:
         self.schemas[table] = as_table.schema.jsonValue()
         self.writes[table] = (mode, rel)
         return staged
+
+
+@contextmanager
+def stage_concurrently(
+    spark: SparkSession, txn: Transaction
+) -> Iterator[Callable[..., Future[DataFrame]]]:
+    """Yield ``submit(table, df, **stage_kwargs)``, which runs
+    ``txn.stage`` on a driver thread pool sized ``defaultParallelism`` and
+    returns a future of the staged root, so independent tables plan, write
+    and read back at once instead of one after another.
+
+    Each task runs with the submitting thread's Spark local properties and
+    tags (job group, description), so ``cancelJobGroup`` reaches the
+    pooled writes.  The block ends when every submitted write has finished
+    and re-raises the first one that failed.  On any error, the caller's
+    or a write's, tasks not yet started are cancelled and running ones are
+    waited for: no write outlives the block, and the error propagates
+    before the caller can commit."""
+    futures: list[Future[DataFrame]] = []
+    with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+
+        def submit(table: str, df: DataFrame, **kwargs) -> Future[DataFrame]:
+            task = inheritable_thread_target(spark)(txn.stage)
+            futures.append(pool.submit(task, table, df, **kwargs))
+            return futures[-1]
+
+        try:
+            yield submit
+            for fut in as_completed(futures):
+                fut.result()
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise
 
 
 def _read_root(spark: SparkSession, path: Path, schema: StructType) -> DataFrame:

@@ -27,6 +27,21 @@ window shuffle → write; nothing collects fact data to the driver.  Nothing
 is cached either: each resolved table is written, then read back from its
 staged root, and the exported ids and referenced dimension keys used by
 the semi-filters are scans of those staged roots (SURVEY.md §7.4.7).
+
+The per-table plans are independent Spark jobs, so they are staged
+concurrently from one driver thread pool (``stage_concurrently``) instead
+of one root at a time.  Dependency order:
+
+1. ``collections``, ``collection_chains`` and every dataset type's
+   find-first resolve are submitted at once;
+2. ``associations`` and ``datastore_records`` are submitted once the
+   dataset roots they semi-filter on are staged;
+3. meanwhile the dimension closure (customer → nation, the one true chain:
+   each step reads the keys the previous staged root references) runs on
+   the calling thread.
+
+The commit waits for every write; a failed write cancels the ones not yet
+started and re-raises before anything publishes.
 """
 
 from __future__ import annotations
@@ -40,7 +55,7 @@ from ..operators.chains import flatten_chains
 from ..operators.find_first import find_first
 from ..operators.priority_dedup import priority_dedup, priority_map
 from ..schema import Universe
-from .catalog import Catalog
+from .catalog import Catalog, stage_concurrently
 
 
 def _validate_schema(label: str, df: DataFrame, expected) -> None:
@@ -95,81 +110,92 @@ def run_export(
     cat = Catalog(out_root)
     txn = cat.begin()
     chain = flatten_chains(spark, collection_chains, collections, root_collection)
-
+    order = universe.sorted_dimensions(list(dimension_records))
+    # Plans that need no staged root are built before the first write is
+    # submitted, so the independent writes start together.
     # -- datasets: find-first resolve per type (J4, calibration bypass) --------
-    exported_ids: DataFrame | None = None
-    exported_keys: dict[str, DataFrame] = {}  # data-ID col -> distinct values
-    for name in names:
-        dt = universe.dataset_types[name]
-        data_id_cols = universe.data_id_columns(name)
-        resolved = find_first(
+    resolved = {
+        name: find_first(
             datasets[name],
             chain,
-            data_id_cols,
-            is_calibration=dt.is_calibration,
+            universe.data_id_columns(name),
+            is_calibration=universe.dataset_types[name].is_calibration,
         )
-        # id/key extraction reads the staged root, not the resolve plan
-        resolved = txn.stage(f"datasets/{name}", resolved, sort_by=data_id_cols)
-        ids = resolved.select("dataset_id")
-        exported_ids = ids if exported_ids is None else exported_ids.unionByName(ids)
-        for c in data_id_cols:
-            vals = resolved.select(F.col(c).alias("__k")).distinct()
-            exported_keys[c] = (
-                vals
-                if c not in exported_keys
-                else exported_keys[c].unionByName(vals).distinct()
-            )
-    if exported_ids is None:
-        raise ValueError("nothing to export")
-    exported_ids = exported_ids.distinct()
-
-    # -- dimension records: dependency-closure expansion (J1) ------------------
-    # Walk dimensions in toposort order; a dimension referenced by exported
-    # datasets exports only the referenced records (semi-join), and its own
-    # payload contributes referenced keys for its dependencies (e.g. the
-    # nations of exported customers), mirroring with_dimension_records().
-    order = universe.sorted_dimensions(list(dimension_records))
-    for dim_name in reversed(order):  # high→low so dependents extend key sets
-        dim = universe.dimensions[dim_name]
-        if not dim.has_own_table or dim_name not in dimension_records:
-            continue
-        records = dimension_records[dim_name]
-        key = dim.keys[0] if len(dim.keys) == 1 else None
-        if key is not None and key in exported_keys:
-            records = records.join(
-                exported_keys[key].withColumnRenamed("__k", key), key, "left_semi"
-            )
-        records = txn.stage(
-            f"dimensions/{dim_name}",
-            records.dropDuplicates(list(dim.keys)),
-            sort_by=list(dim.keys),
-        )
-        # Payload columns that are key columns of a dependency become
-        # referenced keys (customer.nation -> dimension nation).
-        for dep in dim.depends_on:
-            for k in universe.dimensions[dep].keys:
-                if k in dim.payload or k in dim.keys:
-                    vals = records.select(F.col(k).alias("__k")).distinct()
-                    exported_keys[k] = (
-                        vals
-                        if k not in exported_keys
-                        else exported_keys[k].unionByName(vals).distinct()
-                    )
-
-    # -- associations: semi-filter + (collection, data ID) sort (P5/O2) --------
-    assoc = associations.join(exported_ids, "dataset_id", "left_semi")
-    txn.stage("associations", assoc, sort_by=["collection"])
-
-    # -- datastore records: priority dedup then semi-filter (J5/P6) ------------
-    records = datastore_records
+        for name in names
+    }
+    # -- datastore records: priority dedup (J5) --------------------------------
+    store_records = datastore_records
     if datastore_priority:
-        records = priority_dedup(records, priority_map(spark, list(datastore_priority)))
-    records = records.join(exported_ids, "dataset_id", "left_semi")
-    txn.stage("datastore_records", records, sort_by=["datastore_name", "path"])
+        store_records = priority_dedup(
+            store_records, priority_map(spark, list(datastore_priority))
+        )
 
-    # -- collection catalog (K6; two tiny tables, not YAML) --------------------
-    txn.stage("collections", collections)
-    txn.stage("collection_chains", collection_chains)
+    with stage_concurrently(spark, txn) as submit:
+        # -- collection catalog (K6; two tiny tables, not YAML) ----------------
+        submit("collections", collections)
+        submit("collection_chains", collection_chains)
+        resolving = {
+            name: submit(f"datasets/{name}", plan, sort_by=universe.data_id_columns(name))
+            for name, plan in resolved.items()
+        }
+        # id/key extraction reads the staged roots, not the resolve plans
+        exported_ids: DataFrame | None = None
+        exported_keys: dict[str, DataFrame] = {}  # data-ID col -> distinct values
+        for name, fut in resolving.items():
+            staged = fut.result()
+            ids = staged.select("dataset_id")
+            exported_ids = ids if exported_ids is None else exported_ids.unionByName(ids)
+            for c in universe.data_id_columns(name):
+                vals = staged.select(F.col(c).alias("__k")).distinct()
+                exported_keys[c] = (
+                    vals
+                    if c not in exported_keys
+                    else exported_keys[c].unionByName(vals).distinct()
+                )
+        if exported_ids is None:
+            raise ValueError("nothing to export")
+        exported_ids = exported_ids.distinct()
+
+        # -- associations: semi-filter + (collection, data ID) sort (P5/O2) ----
+        assoc = associations.join(exported_ids, "dataset_id", "left_semi")
+        submit("associations", assoc, sort_by=["collection"])
+
+        # -- datastore records: semi-filter (P6) -------------------------------
+        store_records = store_records.join(exported_ids, "dataset_id", "left_semi")
+        submit("datastore_records", store_records, sort_by=["datastore_name", "path"])
+
+        # -- dimension records: dependency-closure expansion (J1) --------------
+        # Walk dimensions in toposort order; a dimension referenced by
+        # exported datasets exports only the referenced records (semi-join),
+        # and its own payload contributes referenced keys for its
+        # dependencies (e.g. the nations of exported customers), mirroring
+        # with_dimension_records().
+        for dim_name in reversed(order):  # high→low so dependents extend key sets
+            dim = universe.dimensions[dim_name]
+            if not dim.has_own_table or dim_name not in dimension_records:
+                continue
+            records = dimension_records[dim_name]
+            key = dim.keys[0] if len(dim.keys) == 1 else None
+            if key is not None and key in exported_keys:
+                records = records.join(
+                    exported_keys[key].withColumnRenamed("__k", key), key, "left_semi"
+                )
+            records = txn.stage(
+                f"dimensions/{dim_name}",
+                records.dropDuplicates(list(dim.keys)),
+                sort_by=list(dim.keys),
+            )
+            # Payload columns that are key columns of a dependency become
+            # referenced keys (customer.nation -> dimension nation).
+            for dep in dim.depends_on:
+                for k in universe.dimensions[dep].keys:
+                    if k in dim.payload or k in dim.keys:
+                        vals = records.select(F.col(k).alias("__k")).distinct()
+                        exported_keys[k] = (
+                            vals
+                            if k not in exported_keys
+                            else exported_keys[k].unionByName(vals).distinct()
+                        )
 
     # -- sidecar manifests (K5/K6 → catalog meta; same atomic swap) ------------
     commit_meta = {

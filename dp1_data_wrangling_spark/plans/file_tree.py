@@ -50,12 +50,17 @@ def mapped_paths(
 
 
 def _create_links(tree_root: str, rows: Iterable) -> int:
-    """Create one symlink per (source, link) row; returns the rows seen."""
+    """Create one symlink per (source, link) row; returns the rows seen.
+    Each distinct parent directory is made once, not once per row."""
     n = 0
+    made: set[str] = set()
     for row in rows:
         n += 1
         dest = os.path.join(tree_root, row["link"])
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        parent = os.path.dirname(dest)
+        if parent not in made:
+            os.makedirs(parent, exist_ok=True)
+            made.add(parent)
         try:
             os.symlink(row["source"], dest)
         except FileExistsError:

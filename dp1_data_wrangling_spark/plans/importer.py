@@ -24,11 +24,33 @@ path-mapping function.  The Spark re-expression:
   with native column expressions; the three reference mappings (RSP, Rucio,
   identity) plus a pandas-UDF plug point for user mappings
   (importer.py:119-126, import_dp1.py:70-122 → P6, C3-C5, §2.11).
+
+Scale posture: every table is anti-joined against the published target
+and written; only the dataset ids and the staged associations are read
+again.  The writes are independent Spark jobs, so they are staged
+concurrently from one driver thread pool (``stage_concurrently``).  The
+one commit publishes them together, so the toposort fixes only the order
+dimensions are submitted in, not an order their writes must finish in.
+Dependency order:
+
+1. every dimension, dataset type, ``collections`` and
+   ``collection_chains`` is submitted up front;
+2. the association type dispatch runs and ``associations`` is submitted
+   while those writes are in flight;
+3. ``datastore_records`` is submitted once the dataset roots behind
+   ``imported_ids`` are staged;
+4. certify runs on the staged associations while ``datastore_records``
+   and any other unfinished write is in flight.
+
+The commit waits for every write; a failed write or a certify failure
+cancels the writes not yet started and re-raises before anything
+publishes.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +62,7 @@ from ..functions.paths import (
 )
 from ..operators.intervals import check_no_overlaps
 from ..schema import Universe
-from .catalog import Catalog
+from .catalog import Catalog, stage_concurrently
 
 PathMapper = Callable[[Column], Column]
 
@@ -113,100 +135,100 @@ def run_import(
     tgt = Catalog(target_root)
     txn = tgt.begin()
 
+    def published(table: str) -> DataFrame | None:
+        return tgt.read(spark, table) if tgt.exists(table) else None
+
+    # Every read is planned before the first write is submitted, so the
+    # independent writes start together and no plan is built beside them.
+    writes: dict[str, tuple[DataFrame, dict]] = {}  # table -> (rows, stage kwargs)
     # -- dimensions, dependency-ordered, skip_existing (O6/K7/P8) --------------
     for dim_name in universe.sorted_dimensions(index["dimensions"]):
         dim = universe.dimensions[dim_name]
         if not dim.has_own_table:
             continue
         table = f"dimensions/{dim_name}"
-        rows = src.read(spark, table)
-        existing = tgt.read(spark, table) if tgt.exists(table) else None
-        rows = _skip_existing(rows, existing, dim.keys)
-        txn.stage(table, rows, sort_by=list(dim.keys))
-
-    # -- datasets per type, partitioned by run (A5/K8) -------------------------
-    imported_ids: DataFrame | None = None
-    for name in requested:
-        table = f"datasets/{name}"
-        rows = src.read(spark, table)
-        existing = tgt.read(spark, table) if tgt.exists(table) else None
-        # imported_ids' semi-filters below read the staged root, so the
-        # anti-joined rows execute once
-        rows = txn.stage(table, _skip_existing(rows, existing, ["dataset_id"]),
-                         partition_by=["run"], sort_by=universe.data_id_columns(name))
-        ids = rows.select("dataset_id")
-        imported_ids = ids if imported_ids is None else imported_ids.unionByName(ids)
-        if existing is not None:
-            prior = existing.select("dataset_id")
-            imported_ids = imported_ids.unionByName(prior)
-    assert imported_ids is not None
-    imported_ids = imported_ids.distinct()
-
-    # -- associations: dispatch on collection type (A6/J7/K9/K10) --------------
-    assoc = src.read(spark, "associations")
-    collections = src.read(spark, "collections")
-    typed = assoc.join(F.broadcast(collections),
-                       assoc.collection == collections.name).drop("name")
-    kinds = {r["type"] for r in typed.select("type").distinct().collect()}
-    bad = kinds - {"TAGGED", "CALIBRATION"}
-    if bad:  # importer.py:113-117
-        raise ValueError(f"unexpected collection type(s) in associations: {sorted(bad)}")
-    new_assoc = typed.drop("type")
-    existing_assoc = (
-        tgt.read(spark, "associations") if tgt.exists("associations") else None
-    )
-    # skip_existing for association rows: whole-row anti-join, null-safe
-    # because TAGGED timespans are NULL (re-import must be a no-op).
-    if existing_assoc is not None:
-        cond = None
-        for c in new_assoc.columns:
-            eq = new_assoc[c].eqNullSafe(existing_assoc[c])
-            cond = eq if cond is None else cond & eq
-        new_assoc = new_assoc.join(existing_assoc, cond, "left_anti")
-    new_assoc = txn.stage("associations", new_assoc, sort_by=["collection"])
-    # certify: validate calibration validity intervals against BOTH the new
-    # and already-published rows for the same (collection, data ID).  The
-    # new rows are the staged root; a failure here aborts before commit.
-    calib_collections = F.broadcast(collections.filter(F.col("type") == "CALIBRATION"))
-
-    def calibrations(rows: DataFrame) -> DataFrame:
-        return rows.join(
-            calib_collections, rows.collection == calib_collections.name
-        ).drop("name", "type")
-
-    calib_new = calibrations(new_assoc)
-    if calib_new.limit(1).count():
-        calib_all = calib_new
-        if existing_assoc is not None:
-            calib_all = calib_all.unionByName(calibrations(existing_assoc))
-        data_id_cols = [
-            c for c in calib_all.columns
-            if c not in {"dataset_id", "run", "collection", "begin_nsec", "end_nsec"}
-        ]
-        check_no_overlaps(calib_all, ["collection", *data_id_cols])
-
-    # -- datastore records: semi-filter + path mapping (P6/C3-C5) --------------
-    records = src.read(spark, "datastore_records").join(
-        imported_ids, "dataset_id", "left_semi"
-    )
-    existing_rec = (
-        tgt.read(spark, "datastore_records")
-        if tgt.exists("datastore_records")
-        else None
-    )
-    records = _skip_existing(records, existing_rec, ["datastore_name", "dataset_id"])
-    if path_mapper is not None:
-        records = records.withColumn("path", path_mapper(F.col("path")))
-    if guard_absolute_uris:  # import_dp1.py:92-95
-        guard_no_absolute_uri(records, "path")
-    txn.stage("datastore_records", records, sort_by=["datastore_name", "path"])
+        rows = _skip_existing(src.read(spark, table), published(table), dim.keys)
+        writes[table] = (rows, {"sort_by": list(dim.keys)})
 
     # -- collection catalog ----------------------------------------------------
-    for table in ("collections", "collection_chains"):
-        rows = src.read(spark, table)
-        existing = tgt.read(spark, table) if tgt.exists(table) else None
-        keys = ["name"] if table == "collections" else ["parent", "child"]
-        txn.stage(table, _skip_existing(rows, existing, keys))
+    for table, keys in (("collections", ["name"]), ("collection_chains", ["parent", "child"])):
+        rows = _skip_existing(src.read(spark, table), published(table), keys)
+        writes[table] = (rows, {})
+
+    # -- datasets per type, partitioned by run (A5/K8) -------------------------
+    prior_ids: list[DataFrame] = []
+    for name in requested:
+        table = f"datasets/{name}"
+        existing = published(table)
+        rows = _skip_existing(src.read(spark, table), existing, ["dataset_id"])
+        writes[table] = (rows, {"partition_by": ["run"],
+                                "sort_by": universe.data_id_columns(name)})
+        if existing is not None:
+            prior_ids.append(existing.select("dataset_id"))
+
+    assoc = src.read(spark, "associations")
+    collections = src.read(spark, "collections")
+    existing_assoc = published("associations")
+    records = src.read(spark, "datastore_records")
+    existing_rec = published("datastore_records")
+
+    with stage_concurrently(spark, txn) as submit:
+        staged = {table: submit(table, rows, **kwargs)
+                  for table, (rows, kwargs) in writes.items()}
+
+        # -- associations: dispatch on collection type (A6/J7/K9/K10) ----------
+        typed = assoc.join(F.broadcast(collections),
+                           assoc.collection == collections.name).drop("name")
+        kinds = {r["type"] for r in typed.select("type").distinct().collect()}
+        bad = kinds - {"TAGGED", "CALIBRATION"}
+        if bad:  # importer.py:113-117
+            raise ValueError(f"unexpected collection type(s) in associations: {sorted(bad)}")
+        new_assoc = typed.drop("type")
+        # skip_existing for association rows: whole-row anti-join, null-safe
+        # because TAGGED timespans are NULL (re-import must be a no-op).
+        if existing_assoc is not None:
+            cond = None
+            for c in new_assoc.columns:
+                eq = new_assoc[c].eqNullSafe(existing_assoc[c])
+                cond = eq if cond is None else cond & eq
+            new_assoc = new_assoc.join(existing_assoc, cond, "left_anti")
+        staged_assoc = submit("associations", new_assoc, sort_by=["collection"])
+
+        # -- datastore records: semi-filter + path mapping (P6/C3-C5) ----------
+        # imported_ids reads the staged dataset roots, so the anti-joined
+        # rows execute once
+        ids = [staged[f"datasets/{name}"].result().select("dataset_id")
+               for name in requested] + prior_ids
+        imported_ids = reduce(DataFrame.unionByName, ids).distinct()
+        records = records.join(imported_ids, "dataset_id", "left_semi")
+        records = _skip_existing(records, existing_rec, ["datastore_name", "dataset_id"])
+        if path_mapper is not None:
+            records = records.withColumn("path", path_mapper(F.col("path")))
+        if guard_absolute_uris:  # import_dp1.py:92-95
+            guard_no_absolute_uri(records, "path")
+        submit("datastore_records", records, sort_by=["datastore_name", "path"])
+
+        # certify: validate calibration validity intervals against BOTH the
+        # new and already-published rows for the same (collection, data ID).
+        # The new rows are the staged root; a failure here aborts before
+        # commit.
+        calib_collections = F.broadcast(collections.filter(F.col("type") == "CALIBRATION"))
+
+        def calibrations(rows: DataFrame) -> DataFrame:
+            return rows.join(
+                calib_collections, rows.collection == calib_collections.name
+            ).drop("name", "type")
+
+        calib_new = calibrations(staged_assoc.result())
+        if calib_new.limit(1).count():
+            calib_all = calib_new
+            if existing_assoc is not None:
+                calib_all = calib_all.unionByName(calibrations(existing_assoc))
+            data_id_cols = [
+                c for c in calib_all.columns
+                if c not in {"dataset_id", "run", "collection", "begin_nsec", "end_nsec"}
+            ]
+            check_no_overlaps(calib_all, ["collection", *data_id_cols])
 
     tgt.commit(txn, meta=meta)  # ONE atomic swap = the whole import (G3)
     return tgt

@@ -5,6 +5,10 @@ idempotence, certify overlap rejection, atomic publish, symlink farm
 from __future__ import annotations
 
 import os
+import time
+import uuid
+from contextlib import contextmanager
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,15 +33,17 @@ def _table_hash(df) -> tuple[int, int]:
     return agg["n"], agg["s"]
 
 
-def _do_export(spark, out_root):
+def _do_export(spark, out_root, *, orders_calib=None):
     universe = fixture_universe()
+    if orders_calib is None:
+        orders_calib = fx.build_datasets(spark, SMOKE_SF)
     return run_export(
         spark,
         out_root,
         universe,
         datasets={
             "orders_raw": fx.build_datasets(spark, SMOKE_SF),
-            "orders_calib": fx.build_datasets(spark, SMOKE_SF),
+            "orders_calib": orders_calib,
         },
         dimension_records={
             "nation": fx.build_dim_nation(spark, SMOKE_SF),
@@ -50,6 +56,25 @@ def _do_export(spark, out_root):
         root_collection="chain_root",
         datastore_priority=["ds_primary", "ds_secondary"],
     )
+
+
+@contextmanager
+def _job_group(sc, group: str):
+    """Tag the jobs the block's thread starts with ``group``."""
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _group_jobs(sc, group: str) -> dict[int, str]:
+    """Job id -> status of every job in ``group``, once the listener bus
+    has drained."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return {j: tracker.getJobInfo(j).status for j in tracker.getJobIdsForGroup(group)}
 
 
 @pytest.fixture(scope="module")
@@ -146,9 +171,62 @@ def test_import_certify_rejects_overlap(spark, export_cat, tmp_path):
     bad.commit(txn)
 
     target = tmp_path / "repo"
-    with pytest.raises(ValueError, match="overlap"):
+    sc = spark.sparkContext
+    group = f"certify-{uuid.uuid4().hex}"
+    with _job_group(sc, group), pytest.raises(ValueError, match="overlap"):
         run_import(spark, str(clone_root), str(target))
     assert not (target / "MANIFEST.json").exists() or Catalog(target).tables() == []
+    # the writes staged alongside certify were waited for, not left running
+    jobs = _group_jobs(sc, group)
+    assert jobs and [j for j, status in jobs.items() if status == "RUNNING"] == []
+
+
+def test_export_failure_publishes_nothing_and_leaves_no_job(spark, tmp_path):
+    """One of two dataset types raises while its write runs beside the
+    others: ``run_export`` raises that error, the catalog publishes no
+    table, no job the export started is still running once it returns,
+    and no file appears under the root afterwards."""
+    sc = spark.sparkContext
+    group = f"export-fails-{uuid.uuid4().hex}"
+    calib = fx.build_datasets(spark, SMOKE_SF)
+    broken = calib.withColumn(
+        "nation",
+        F.when(
+            F.col("nation").isNotNull(), F.raise_error(F.lit("planted export failure"))
+        ).otherwise(F.col("nation")),
+    )
+    root = tmp_path / "exp"
+    with _job_group(sc, group), pytest.raises(Exception, match="planted export failure"):
+        _do_export(spark, str(root), orders_calib=broken)
+    assert Catalog(root).tables() == []
+    jobs = _group_jobs(sc, group)
+    assert jobs and [j for j, status in jobs.items() if status == "RUNNING"] == []
+    files = set(Path(root).rglob("*"))
+    time.sleep(1)
+    assert set(Path(root).rglob("*")) == files
+
+
+def test_export_and_import_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """Every job ``run_export`` and ``run_import`` start, the pooled
+    writes' included, carries the caller's job group, so
+    ``cancelJobGroup`` reaches them.  Two one-job marker actions in their
+    own group bracket the calls; every job id between them must be in the
+    caller's group."""
+    sc = spark.sparkContext
+    group, marker = (f"{k}-{uuid.uuid4().hex}" for k in ("g", "marker"))
+
+    def mark() -> None:
+        with _job_group(sc, marker):
+            spark.range(1).collect()
+
+    mark()
+    with _job_group(sc, group):
+        exp = _do_export(spark, str(tmp_path / "exp"))
+        run_import(spark, str(exp.root), str(tmp_path / "repo"), path_mapper="rsp")
+    mark()
+    first, last = sorted(_group_jobs(sc, marker))
+    assert last - first > 1
+    assert set(range(first + 1, last)) == set(_group_jobs(sc, group))
 
 
 def test_migration_coalesces_staged_roots_and_caches_nothing(spark, tmp_path):
@@ -171,6 +249,41 @@ def test_migration_coalesces_staged_roots_and_caches_nothing(spark, tmp_path):
     )
     persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     assert persisted <= persisted_before
+
+
+def test_stage_concurrently_records_every_distinct_table(spark, tmp_path):
+    """``Transaction.stage`` called from the pool for many distinct tables
+    at once, with thread switches forced often, loses none of the
+    per-table entries the commit publishes (root, schema, zone map, CHECK
+    set): three times as many tables as pool threads, each with its own
+    row count."""
+    import sys
+
+    from dp1_data_wrangling_spark.plans.catalog import stage_concurrently
+
+    cat = Catalog(tmp_path / "cat")
+    n = 3 * spark.sparkContext.defaultParallelism
+    tables = [f"t{i}" for i in range(n)]
+    for t in tables:
+        cat.set_zone_map(t, ["id"])
+        cat.set_constraint(t, "nonneg", "id >= 0")
+    txn = cat.begin()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with stage_concurrently(spark, txn) as submit:
+            staged = [submit(t, spark.range(i + 1)) for i, t in enumerate(tables)]
+            counts = [f.result(timeout=300).count() for f in staged]
+    finally:
+        sys.setswitchinterval(interval)
+    assert counts == list(range(1, n + 1))
+    cat.commit(txn)
+    m = cat.manifest()
+    assert sorted(m["tables"]) == sorted(tables)
+    for i, t in enumerate(tables):
+        (rel,) = m["tables"][t]
+        assert m["zones"][t][rel]["id"][:2] == [0, i]
+        assert cat.read(spark, t).count() == i + 1
 
 
 def test_atomic_commit_staging_invisible(spark, export_cat, tmp_path):
@@ -1845,21 +1958,14 @@ def test_catalog_read_and_append_run_no_schema_jobs(spark, tmp_path):
     8-root table (one root schema-evolved, one hive-partitioned) runs no
     Spark job before its action, with or without a pruning ``where``, and
     the 9th append's ``stage`` runs as many jobs as the 1st."""
-    import uuid
-
     sc = spark.sparkContext
 
     def jobs(fn):
         """(Spark jobs ``fn`` ran, its result), counted in a job group."""
         group = f"schema-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
+        with _job_group(sc, group):
             out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+        return len(_group_jobs(sc, group)), out
 
     cat = Catalog(str(tmp_path / "cat"))
     cat.set_zone_map("t", ["ts"])
