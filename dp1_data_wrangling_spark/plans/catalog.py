@@ -18,16 +18,20 @@ commit protocol Iceberg/Delta use, minus compaction — and unlike
 directory-rename publishing it also works on object stores where rename
 is copy+delete.
 
-Appends list multiple directories per table (each root is scanned and the
-scans union with no shuffle); ``overwrite`` replaces the list.
+Appends list multiple directories per table; ``overwrite`` replaces the
+list.  A read scans a snapshot's roots as one Parquet scan per root layout
+(the flat roots sharing a merge-on-read delete scope together, each
+hive-partitioned root on its own) and unions the scans with no shuffle, so
+an N-commit read pays for one file index, not N.
 
 The manifest also records each root's schema (``schemas``, keyed by rel:
 the written types, as the table reads the root once ``stage``'s write
-commits).  A table's schema is the rel-order, first-seen fold of its
-roots' schemas, and every read reads each root with it: a read returns
-the written types (a hive partition column included), a column a root
-lacks reads as NULL, an empty root reads as empty, and no
-schema-inference job runs.
+commits) and each hive-partitioned root's partition columns (``parts``),
+so a read groups roots by layout without listing a directory.  A table's
+schema is the rel-order, first-seen fold of its roots' schemas, and every
+read reads each root with it: a read returns the written types (a hive
+partition column included), a column a root lacks reads as NULL, an empty
+root reads as empty, and no schema-inference job runs.
 
 Because data directories are immutable (a txn only ever adds new ones) and
 every commit also writes an immutable ``manifest-v{N}.json`` snapshot,
@@ -96,6 +100,9 @@ class Transaction:
     # the schema the table reads the staged root with:
     # table -> StructType JSON (commit records it under the root's rel)
     schemas: dict[str, dict] = field(default_factory=dict)
+    # the hive partition columns of a partitioned staged root:
+    # table -> partition_by (commit records it under the root's rel)
+    parts: dict[str, list[str]] = field(default_factory=dict)
 
     def stage(
         self,
@@ -202,7 +209,7 @@ class Transaction:
         if max_records_per_file is not None:
             writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
         writer.parquet(str(out))
-        staged = _read_root(spark, out, schema)
+        staged = _read_roots(spark, [out], schema)
         zone_cols = cat.zone_map(table)
         bloom_cols = cat.bloom_map(table)
         # The CHECK and stats passes read the root with the schema the
@@ -210,7 +217,7 @@ class Transaction:
         # column an evolved append omits reads as NULL, and an overwrite
         # that drops a constrained column no longer carries it.
         as_table = (
-            _read_root(spark, out, _fold([current, staged.schema]))
+            _read_roots(spark, [out], _fold([current, staged.schema]))
             if current is not None
             else staged
         )
@@ -267,6 +274,8 @@ class Transaction:
         if bs:
             self.bloom_stats[table] = bs
         self.schemas[table] = as_table.schema.jsonValue()
+        if partition_by:
+            self.parts[table] = list(partition_by)
         self.writes[table] = (mode, rel)
         return staged
 
@@ -304,12 +313,15 @@ def stage_concurrently(
             raise
 
 
-def _read_root(spark: SparkSession, path: Path, schema: StructType) -> DataFrame:
-    """One commit root read with ``schema``: no inference job, a column
-    the root lacks reads as NULL, a hive partition column takes its type
-    from ``schema`` and an empty root reads as empty.  The reader puts
-    partition columns last; the select restores ``schema``'s order."""
-    df = spark.read.schema(schema).parquet(str(path))
+def _read_roots(
+    spark: SparkSession, paths: list[Path], schema: StructType
+) -> DataFrame:
+    """Commit roots of one layout read with ``schema`` as one scan (one
+    file index): no inference job, a column a root lacks reads as NULL, a
+    hive partition column takes its type from ``schema`` and an empty
+    root reads as empty.  The reader puts partition columns last; the
+    select restores ``schema``'s order."""
+    df = spark.read.schema(schema).parquet(*map(str, paths))
     return df.select(*[df[f"`{n}`"] for n in schema.names])
 
 
@@ -331,7 +343,7 @@ def _table_schema_m(m: dict, table: str) -> StructType:
 
 
 # the manifest's per-root bags: table -> rel -> entry
-_ROOT_BAGS = ("zones", "blooms", "schemas")
+_ROOT_BAGS = ("zones", "blooms", "schemas", "parts")
 
 
 def _root_entries(m: dict, table: str, rels: list[str]) -> dict:
@@ -821,7 +833,7 @@ class Catalog:
             )
             if not (need_z or need_b):
                 continue
-            df = _read_root(spark, self.root / rel, schema)
+            df = _read_roots(spark, [self.root / rel], schema)
             entry: dict[str, dict] = {}
             if need_z:
                 zs = _compute_zone_stats(df, zone_cols)
@@ -880,13 +892,17 @@ class Catalog:
         (``prune_roots``); a predicate it cannot reason about scans every
         root — always sound, because the filter is applied in full
         either way.  A pruned read keeps every column of the table; with
-        every root pruned it is an empty relation of the table's schema."""
+        every root pruned it is an empty relation of the table's schema.
+
+        The manifest is loaded once: pruning runs against the version
+        that load returned (an immutable snapshot), so a commit landing
+        mid-call cannot put a newer version's roots into this read."""
         m = self.manifest(version)
         if table not in m["tables"]:
             raise KeyError(f"catalog {self.root}: no table {table!r}")
         if where is None:
             return self.read_snapshot(spark, m, table)
-        kept = self.prune_roots(table, where, version=version)
+        kept = self.prune_roots(table, where, version=m["version"])
         return self.read_snapshot(spark, m, table, kept).filter(where)
 
     def read_snapshot(
@@ -898,8 +914,9 @@ class Catalog:
     ) -> DataFrame:
         """``table`` as of the manifest snapshot ``m`` that the caller
         holds (e.g. to commit against it with ``require_roots``), or only
-        its roots ``rels``: each root read with the snapshot's table
-        schema, pending merge-on-read deletes applied."""
+        its roots ``rels``: one scan per root layout (``_read_rels``),
+        every root read with the snapshot's table schema, pending
+        merge-on-read deletes applied."""
         if rels is None:
             rels = m["tables"][table]
         return self._read_rels(spark, m, table, rels, _table_schema_m(m, table))
@@ -913,29 +930,49 @@ class Catalog:
         schema: StructType,
     ) -> DataFrame:
         """Read commit roots with ``schema`` and the snapshot ``m``'s
-        pending merge-on-read deletes applied — each delete predicate
-        filters ONLY the roots it was scoped to (appends after the delete
-        are untouched), with DELETE's three-valued semantics (NULL
-        predicate keeps the row).  Every root reads with the same schema,
-        so a predicate naming a column a root lacks sees NULL there and
-        the union needs no alignment.  No roots: an empty relation of
-        ``schema`` (the zero limit lets the optimizer see it is empty, so
-        no job runs)."""
+        pending merge-on-read deletes applied: one Parquet scan per root
+        layout, the scans unioned.
+
+        A root's layout is its partition base and the delete entries
+        scoped to it.  Spark discovers hive partitions under one base path
+        only, so a partitioned root (``parts`` in the manifest) scans
+        alone, while flat roots under the same delete entries share a
+        scan of at most ``spark.sql.sources.parallelPartitionDiscovery.
+        threshold`` roots (above it Spark lists the paths in a job before
+        the action).  Each delete predicate filters ONLY the roots it was
+        scoped to (appends after the delete are untouched), with DELETE's
+        three-valued semantics (NULL predicate keeps the row).  Every scan
+        reads with the same schema, so a predicate naming a column a root
+        lacks sees NULL there and the union needs no alignment.  No
+        roots: an empty relation of ``schema`` (the zero limit lets the
+        optimizer see it is empty, so no job runs)."""
         from pyspark.sql import functions as F
 
         if not rels:
             return spark.createDataFrame([], schema).limit(0)
         entries = m.get("deletes", {}).get(table, [])
-        parts = []
+        parts = m.get("parts", {}).get(table, {})
+        layouts: dict[tuple, list[str]] = {}
         for rel in rels:
-            df = _read_root(spark, self.root / rel, schema)
-            for e in entries:
-                if rel in e.get("roots", []):
-                    df = df.filter(
-                        ~F.coalesce(F.expr(e["p"]).cast("boolean"), F.lit(False))
-                    )
-            parts.append(df)
-        return reduce(DataFrame.union, parts)
+            base = rel if rel in parts else None  # flat roots share None
+            scope = tuple(
+                i for i, e in enumerate(entries) if rel in e.get("roots", [])
+            )
+            layouts.setdefault((base, scope), []).append(rel)
+        cap = max(1, int(spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold")))
+        scans = []
+        for (_, scope), group in layouts.items():
+            for i in range(0, len(group), cap):
+                df = _read_roots(
+                    spark, [self.root / r for r in group[i : i + cap]], schema
+                )
+                for j in scope:
+                    df = df.filter(~F.coalesce(
+                        F.expr(entries[j]["p"]).cast("boolean"), F.lit(False)
+                    ))
+                scans.append(df)
+        return reduce(DataFrame.union, scans)
 
     def pending_deletes(
         self, table: str, *, version: int | None = None
@@ -1015,15 +1052,15 @@ class Catalog:
     ) -> int:
         """Rewrite a multi-commit (appended) table into one txn root.
 
-        Every append adds a root; reads then union per-root scans, and at
-        100 TB hundreds of roots mean hundreds of file listings per query.
+        Every append adds a root, and at 100 TB hundreds of roots mean
+        hundreds of files to list and plan per query.
         Compaction reads the current state and republishes it as a single
         overwrite commit — the old roots stop being referenced and a later
         ``vacuum`` reclaims them.  Time travel is preserved: pre-compaction
         versions still resolve through their snapshots until vacuumed.
         ``sort_by``/``partition_by`` re-apply the table's physical layout
-        (the manifest does not record it).  ``range_by`` goes further and
-        CLUSTERS the rewrite: one ``repartitionByRange`` shuffle gives
+        (the manifest records only each root's partition columns).
+        ``range_by`` goes further and CLUSTERS the rewrite: one ``repartitionByRange`` shuffle gives
         every output file a disjoint key range, so after compaction
         key-predicate scans prune file-by-file on parquet footer stats —
         appends arrive unclustered, periodic compaction restores the
@@ -1342,14 +1379,17 @@ class Catalog:
         catalog declares its slice once, and every query on the view
         scans only the surviving roots.
 
-        Views resolve lazily through the SAME reader (multi-root union,
-        each root read with the manifest's recorded table schema, so a view
-        has the written column types), so predicate pushdown, partition
-        pruning, and column pruning all apply to SQL exactly as to the
-        DataFrame API."""
+        Every view reads the same commit: without ``version``, the live
+        version is pinned once, so a commit landing mid-call reaches no
+        view.  Views resolve lazily through the SAME reader (one scan per
+        root layout, every root read with the manifest's recorded table
+        schema, so a view has the written column types), so predicate
+        pushdown, partition pruning, and column pruning all apply to SQL
+        exactly as to the DataFrame API."""
         out: dict[str, str] = {}
         taken: dict[str, str] = {}
-        for t in sorted(self.manifest(version)["tables"]):
+        m = self.manifest(version)
+        for t in sorted(m["tables"]):
             view = prefix + t.replace("/", "_").replace(".", "_")
             if view in taken:
                 # 'a/b' and 'a.b' both sanitize to 'a_b' — registering the
@@ -1361,7 +1401,9 @@ class Catalog:
                 )
             taken[view] = t
             pred = (where or {}).get(t)
-            self.read(spark, t, version=version, where=pred).createOrReplaceTempView(view)
+            self.read(
+                spark, t, version=m["version"], where=pred
+            ).createOrReplaceTempView(view)
             out[t] = view
         return out
 
@@ -1858,6 +1900,10 @@ class Catalog:
                 m.setdefault("schemas", {}).setdefault(table, {})[
                     rel
                 ] = txn.schemas[table]
+                if table in txn.parts:
+                    m.setdefault("parts", {}).setdefault(table, {})[
+                        rel
+                    ] = txn.parts[table]
                 if table in txn.zone_stats:
                     m.setdefault("zones", {}).setdefault(table, {})[
                         rel

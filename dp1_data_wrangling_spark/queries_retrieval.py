@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from .queries_llm import _md5mod
 from .registry import register
-from .tables import load_table, spread
+from .tables import load_table, local_df, spread
 
 
 # ---------------------------------------------------------------------------
@@ -120,9 +120,7 @@ def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.retrieval import bm25_topk
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    queries = spark.createDataFrame(
-        BM25_QUERIES, ["query_id", "query_text"]
-    )
+    queries = local_df(spark, BM25_QUERIES, "query_id long, query_text string")
     return bm25_topk(
         docs, queries, text_col="text", id_col="doc_id", k=10
     )
@@ -205,9 +203,7 @@ def q_doc_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.retrieval import phrase_search
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    phrases = spark.createDataFrame(
-        PHRASE_QUERIES, ["phrase_id", "phrase_text"]
-    )
+    phrases = local_df(spark, PHRASE_QUERIES, "phrase_id long, phrase_text string")
     out = phrase_search(
         docs, phrases, text_col="text", id_col="doc_id"
     )
@@ -235,7 +231,7 @@ def q_bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(tempfile.mkdtemp(prefix="textidx_q_"))
     docs = spread(load_table(spark, sf_dir, "documents"))
     build_text_index(spark, cat, docs.select("doc_id", "text"))
-    queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
+    queries = local_df(spark, BM25_QUERIES, "query_id long, query_text string")
     return bm25_query_index(spark, cat, queries, 10)
 
 
@@ -399,7 +395,7 @@ def q_bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.retrieval import bm25_topk, ndcg_at_k
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
+    queries = local_df(spark, BM25_QUERIES, "query_id long, query_text string")
     ranking = bm25_topk(docs, queries, text_col="text", id_col="doc_id", k=10)
     labels = (
         queries.select("query_id")
@@ -478,9 +474,7 @@ def q_doc_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.retrieval import bm25_topk, coverage_topk, rrf_fuse
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    queries = spark.createDataFrame(
-        BM25_QUERIES, ["query_id", "query_text"]
-    )
+    queries = local_df(spark, BM25_QUERIES, "query_id long, query_text string")
     bm = bm25_topk(
         docs, queries, text_col="text", id_col="doc_id", k=10
     ).select("query_id", "rank", "doc_id")
@@ -568,7 +562,7 @@ def q_bm25_mrr_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.retrieval import bm25_topk, mrr_map_at_k
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
+    queries = local_df(spark, BM25_QUERIES, "query_id long, query_text string")
     ranking = bm25_topk(docs, queries, text_col="text", id_col="doc_id", k=10)
     labels = (
         queries.select("query_id")

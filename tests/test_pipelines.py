@@ -1995,7 +1995,118 @@ def test_catalog_read_and_append_run_no_schema_jobs(spark, tmp_path):
     assert df.columns == ["ts", "tag", "b"]
     assert df.count() == 80 and df.filter("b is not null").count() == 10
     assert sorted(r.ts for r in pruned.collect()) == list(range(15))
+    # above the discovery threshold Spark lists a scan's paths (and a
+    # root's partition directories: the partitioned root has 3) in a job,
+    # so no scan of the read may list more roots than the session allows
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        n_capped, capped = jobs(lambda: cat.read(spark, "t"))
+    finally:
+        spark.conf.set(key, threshold)
+    assert n_capped == 0
+    assert capped.count() == 80
     assert append(80) == first
+
+
+def test_catalog_read_one_scan_per_layout_and_delete_scope(spark, tmp_path):
+    """A snapshot reads as one Parquet scan per root layout: the flat
+    roots a merge-on-read delete is scoped to, the hive-partitioned root,
+    and the flat roots appended after the delete (one schema-evolved, one
+    empty) scan once each.  The rows equal a union of single-root reads,
+    each with its scoped deletes applied, and a partition predicate still
+    prunes partitions.  Clone and restore carry each root's layout."""
+    import re
+
+    cat = Catalog(str(tmp_path / "cat"))
+
+    def append(lo: int, *, with_b=False, partition_by=None, empty=False) -> None:
+        df = spark.range(lo, lo + 10).select(
+            F.col("id").alias("ts"), (F.col("id") % 3).cast("string").alias("tag")
+        )
+        if with_b:
+            df = df.withColumn("b", F.col("ts") * 2)
+        tx = cat.begin()
+        tx.stage("t", df.limit(0) if empty else df, partition_by=partition_by,
+                 evolve_schema=True)
+        cat.commit(tx)
+
+    append(0)
+    append(10)
+    cat.delete_merge_on_read("t", "ts % 4 = 0")  # scoped to the first two roots
+    append(20, partition_by=["tag"])
+    append(30, with_b=True)
+    append(40, empty=True)
+    append(50)
+    m = cat.manifest()
+    rels = m["tables"]["t"]
+    assert m["parts"]["t"] == {rels[2]: ["tag"]}
+
+    df = cat.read(spark, "t")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 3
+    schema = cat.table_schema("t")
+    ref = None
+    for rel in rels:
+        one = spark.read.schema(schema).parquet(str(cat.root / rel)).select(*schema.names)
+        for e in m["deletes"]["t"]:
+            if rel in e["roots"]:
+                one = one.filter(~F.coalesce(F.expr(e["p"]), F.lit(False)))
+        ref = one if ref is None else ref.union(one)
+    assert df.columns == ["ts", "tag", "b"]
+    assert df.count() == ref.count() == 45
+    assert df.exceptAll(ref).count() == 0 and ref.exceptAll(df).count() == 0
+
+    tagged = cat.read(spark, "t", where="tag = '1'")
+    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*\(tag#\d+ = 1\)", plan), plan
+    assert tagged.count() == ref.filter("tag = '1'").count() == 14
+
+    # clone and restore carry the partitioned root's layout with it
+    v = cat.manifest()["version"]
+    cat.clone("t", "t2")
+    tx = cat.begin()
+    tx.stage("t", spark.range(1).select(F.col("id").alias("ts")), mode="overwrite")
+    cat.commit(tx)
+    assert set(cat.manifest()["parts"]) == {"t2"}
+    cat.restore("t", v)
+    for name in ("t", "t2"):
+        again = cat.read(spark, name)
+        assert again.count() == 45 and again.exceptAll(ref).count() == 0
+
+
+def test_catalog_read_and_views_see_one_snapshot(spark, tmp_path, monkeypatch):
+    """``read(where=...)`` and ``register_views()`` load the manifest once:
+    an append that commits right after that load reaches neither the read
+    nor any view."""
+    cat = Catalog(str(tmp_path / "cat"))
+    tx = cat.begin()
+    tx.stage("t", spark.range(10).withColumnRenamed("id", "ts"))
+    tx.stage("u", spark.range(3))
+    cat.commit(tx)
+    real = Catalog.manifest
+    armed: list[bool] = []
+
+    def racing(self, version=None):
+        """The manifest, then (once armed) an append to ``t`` commits."""
+        m = real(self, version)
+        if armed:
+            armed.clear()
+            tx = self.begin()
+            tx.stage("t", spark.range(100, 110).withColumnRenamed("id", "ts"))
+            self.commit(tx)
+        return m
+
+    monkeypatch.setattr(Catalog, "manifest", racing)
+    armed.append(True)
+    assert cat.read(spark, "t", where="ts >= 0").count() == 10
+    assert cat.read(spark, "t").count() == 20  # the append did commit
+    armed.append(True)
+    views = cat.register_views(spark, prefix="snap_")
+    assert spark.table(views["t"]).count() == 20
+    assert spark.table(views["u"]).count() == 3
+    assert cat.read(spark, "t").count() == 30
 
 
 def test_catalog_describe_history(spark, tmp_path):
